@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.sources.{Catalog, TableStore}
+import graft.sources.{Bucketing, Catalog, TableStore}
 
 /** The composed applicant pipeline — the reference system's
   * "INSERT … SELECT" (webhook_handler.py:133-212 batch endpoint +
@@ -141,7 +143,9 @@ object ApplicantPipeline {
     *   4. tier classification upserted into enrichment_data on
     *      (company_id, provider) per the charge rule;
     *   5. shared_officer_edges rebuilt wholesale from appointments
-    *      (M8 overwrite; applicant_pipeline.py:97-104).
+    *      (M8 overwrite; applicant_pipeline.py:97-104) whenever
+    *      appointments or the edge table changed since this process
+    *      last rebuilt it.
     *
     * `companies` must carry (company_id, company_name, has_charges). */
   def runWithStore(store: TableStore, raw: DataFrame,
@@ -212,15 +216,34 @@ object ApplicantPipeline {
             .as("enrichment_data")),
       Catalog.enrichmentData))
 
-    // M8: the officer network is a derived table — rebuilt wholesale from
-    // appointments, never incrementally patched
-    store.overwrite("shared_officer_edges", Catalog.conform(
-      Graph.sharedKeyEdges(store.read("appointments"), "officer_id", "company_id")
-        .select(xxhash64(col("item_a"), col("item_b")).as("id"),
-          col("item_a").as("company_a_id"), col("item_b").as("company_b_id"),
-          col("weight").cast("int").as("shared_officer_count")),
-      Catalog.sharedOfficerEdges))
-
+    rebuildOfficerEdges(raw.sparkSession, store)
     out
+  }
+
+  // edges path -> (appointments, edges) fingerprints after the last
+  // rebuild this process made
+  private val edgesBuiltFrom = new ConcurrentHashMap[String, (String, String)]()
+
+  /** M8: the officer network is a derived table — rebuilt wholesale from
+    * appointments, never incrementally patched. The rebuild is skipped
+    * only when both the appointments snapshot and the edge table still
+    * have the file listings ([[Bucketing.pathFingerprint]]) that the last
+    * rebuild in this process read and wrote; any other change, by this
+    * process or another, rebuilds. */
+  private def rebuildOfficerEdges(spark: SparkSession, store: TableStore): Unit = {
+    store.createIfNotExists("appointments")
+    val edges = store.path("shared_officer_edges")
+    def edgesFingerprint() =
+      if (store.exists("shared_officer_edges")) Bucketing.pathFingerprint(spark, edges) else ""
+    val appointments = Bucketing.pathFingerprint(spark, store.path("appointments"))
+    if (edgesBuiltFrom.get(edges) != ((appointments, edgesFingerprint()))) {
+      store.overwrite("shared_officer_edges", Catalog.conform(
+        Graph.sharedKeyEdges(store.read("appointments"), "officer_id", "company_id")
+          .select(xxhash64(col("item_a"), col("item_b")).as("id"),
+            col("item_a").as("company_a_id"), col("item_b").as("company_b_id"),
+            col("weight").cast("int").as("shared_officer_count")),
+        Catalog.sharedOfficerEdges))
+      edgesBuiltFrom.put(edges, (appointments, edgesFingerprint()))
+    }
   }
 }

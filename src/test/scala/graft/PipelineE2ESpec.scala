@@ -142,6 +142,41 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(stStream.keyViolations("applicant_company_matches").count() == 0)
   }
 
+  test("officer edges rebuild only when appointments changed") {
+    val st = store()
+    def runBatch() = ApplicantPipeline.runWithStore(st, raw,
+      "input_id", "planning_reference", "applicant_name",
+      borough = "camden", companies = companies)
+    // every file under the edge table with its size and modification time
+    def edgeFiles(): Set[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(st.path("shared_officer_edges")))
+        .map(f => s"${f.getName}:${f.length}:${f.lastModified}").toSet
+    }
+    def edges() = st.read("shared_officer_edges")
+      .select("company_a_id", "company_b_id", "shared_officer_count")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+
+    runBatch()
+    val built = edgeFiles()
+    assert(edges() == Set((100L, 101L, 2)))
+
+    // unchanged appointments: the edge table is not rewritten
+    runBatch()
+    assert(edgeFiles() == built, "unchanged appointments must not rewrite the edges")
+
+    // officer 3 joins companies 101 and 102: the next run rebuilds
+    st.append("appointments", Catalog.rows(spark, Catalog.appointments, Seq(
+      Map("id" -> 5L, "officer_id" -> 3L, "company_id" -> 101L,
+        "role" -> "director", "is_active" -> true),
+      Map("id" -> 6L, "officer_id" -> 3L, "company_id" -> 102L,
+        "role" -> "director", "is_active" -> true))))
+    runBatch()
+    assert(edgeFiles() != built)
+    assert(edges() == Set((100L, 101L, 2), (101L, 102L, 1)))
+  }
+
   test("two applicants sharing a reference create ONE planning application") {
     val st = store()
     val shared = Seq[(Long, String, String)](

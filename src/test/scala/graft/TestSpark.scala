@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for all suites. */
+/** One shared local SparkSession for all suites. The codegen cache takes
+  * the production policy, [[GraftSession.CodegenCacheConf]], so the
+  * suites compile generated code as often as the engine does. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -14,6 +16,7 @@ object TestSpark {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.CodegenCacheConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
