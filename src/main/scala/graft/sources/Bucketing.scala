@@ -72,7 +72,7 @@ object Bucketing {
   /** Driver-side fingerprint of the FILES behind a path (name, length,
     * modification time, recursively; the full path string is mixed in) —
     * the freshness key for materializations derived from file-backed
-    * inputs. An append or rewrite changes the listing, so a memo keyed
+    * inputs and for [[graft.Tables]]' footer memos. An append or rewrite changes the listing, so a memo keyed
     * on this fingerprint rebuilds instead of serving a stale derived
     * table; identical listings reuse the build. Cost is one catalog
     * listing, ∝ file count — the same metadata a parquet scan's file

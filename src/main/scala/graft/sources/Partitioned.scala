@@ -44,11 +44,13 @@ object Partitioned {
   /** The j14 demo shape: date-partitioned events joined to a
     * runtime-filtered dim of days — the events scan must carry a
     * `dynamicpruningexpression` partition filter (asserted in PlanSpec),
-    * i.e. at scale it lists only the dim-selected day directories. */
+    * i.e. at scale it lists only the dim-selected day directories. Both
+    * sides read through [[graft.Tables.parquet]], so a repeat
+    * construction infers no schema. */
   def dppJoin(spark: SparkSession, dir: String, tag: String): DataFrame = {
     val path = ensureEventsByDay(spark, dir, tag)
-    val fact = spark.read.parquet(path)
-    val dim = spark.read.parquet(path)
+    val fact = graft.Tables.parquet(spark, path)
+    val dim = graft.Tables.parquet(spark, path)
       .select(col("day")).distinct()
       .filter(dayofmonth(col("day")) <= 3)
     fact.join(dim, "day")

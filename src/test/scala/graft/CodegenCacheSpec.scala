@@ -27,19 +27,9 @@ class CodegenCacheSpec extends AnyFunSuite {
       s"${GraftSession.CodegenCacheEntries}) or a repeat generated " +
       "different code (see GraftSession.CodegenCacheConf)"
 
-  // the dashboard cycle: short registry queries over every layer
-  private val dashboard = Seq(
-    "q1_agg", "q2_min_cost_supplier", "q3_shipping_priority",
-    "q5_local_supplier", "q6_forecast_revenue", "q9_product_profit",
-    "q10_returned_item", "q13_cust_dist", "q17_small_qty_revenue",
-    "q18_large_orders", "q20_potential_promotion", "q21_waiting_supplier",
-    "j1_left_join_agg", "j11_range_join", "j14_dpp_join", "w1_topk_per_group",
-    "t7_daily_window", "t8_sessionize", "t9_asof_join", "t12_hopping_window",
-    "a42_hll", "dd_exact", "g_degrees", "dq_expectations")
-
   test("a repeated pass of registry queries compiles nothing") {
     val sf = "/root/testdata/sf0.001"
-    def pass(): Unit = dashboard.foreach { n =>
+    def pass(): Unit = Dashboard.queries.foreach { n =>
       SparkEntry.queries(n)(spark, sf).collect()
       ()
     }
