@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.VersionedStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,7 +19,7 @@ import org.apache.spark.sql.functions._
   *    bucket-pruned read, never a corpus shuffle;
   *  - tombstones: (cand_id, upto_gen) retract a vector's postings up to
   *    that generation — merge-on-read, broadcast at serve, physically
-  *    dropped by [[compactIndex]]'s atomic era swap ([[IndexStore]]);
+  *    dropped by [[compactIndex]]'s atomic version commit ([[IndexStore]]);
   *  - known ids: the compact id list [[ingestNewVectors]] anti-joins
   *    against, maintained alongside the postings so the redelivery
   *    guard costs ∝ index CARDINALITY, never a full postings scan;
@@ -43,7 +44,7 @@ import org.apache.spark.sql.functions._
   *
   * Generations are WRITE-AHEAD CLAIMED: an append first creates an
   * atomic claim marker (`base/gen/g_<n>`, [[IndexStore.claimGen]] — the
-  * era-marker primitive reused) and only then writes postings at that
+  * version-marker primitive reused) and only then writes postings at that
   * generation, so non-reuse holds UNCONDITIONALLY — a crash at any
   * point leaves the marker ≥ every generation on disk, and the next
   * append (recovered or not) claims strictly above it. This closes the
@@ -51,11 +52,11 @@ import org.apache.spark.sql.functions._
   * the tombstoned generation and being wrongly suppressed — serving is
   * strictly gen > upto_gen) without the round-10 cost of scanning the
   * postings for their max on every append: the claim floor reads the
-  * era meta (1 row) and the bounded tombstone table, never the corpus.
-  * Compaction folds the watermark into the new era's meta and
+  * version meta (1 row) and the bounded tombstone table, never the corpus.
+  * Compaction folds the watermark into the new version's meta and
   * truncates the markers, so the claim list is O(appends since the
-  * last compaction). The era meta itself is IMMUTABLE once staged
-  * (geometry + counter floor written exactly once per era) — no
+  * last compaction). The version meta itself is IMMUTABLE once staged
+  * (geometry + counter floor written exactly once per version) — no
   * delete-then-rewrite window can leave it empty (round-10 ADVICE).
   *
   * Citations: reference repo has no vector serving at all (its search is
@@ -70,9 +71,6 @@ object AnnIndex {
   private def idsTable(tag: String) = s"g_ann_ids_$tag"
   private def indexBase(tag: String) =
     s"${graft.sources.Bucketing.processRoot}/ann_$tag"
-
-  private def centDir(base: String, era: Long) = s"$base/cent_e$era"
-  private def metaDir(base: String, era: Long) = s"$base/meta_e$era"
 
   /** Persisted index geometry + generation counter (the 1-row meta).
     * `words` = ceil(dims/32) sign-code words measured at build time —
@@ -97,23 +95,23 @@ object AnnIndex {
       tag: String): Meta =
     parseMeta(spark.table(metaTable(tag)).collect().head)
 
+  private def dir(tag: String, table: String, v: Long) =
+    VersionedStore.tableDir(indexBase(tag), table, v)
+
   private def registerTables(spark: org.apache.spark.sql.SparkSession,
-      tag: String, era: Long, buckets: Int): Unit = {
-    val base = indexBase(tag)
-    IndexStore.registerBucketed(spark, postTable(tag),
-      IndexStore.postDir(base, era), "cell", buckets)
-    IndexStore.registerParquet(spark, centTable(tag), centDir(base, era))
-    IndexStore.registerParquet(spark, tombTable(tag),
-      IndexStore.tombDir(base, era))
-    IndexStore.registerParquet(spark, metaTable(tag), metaDir(base, era))
-    IndexStore.registerParquet(spark, idsTable(tag),
-      IndexStore.idsDir(base, era))
+      tag: String, v: Long, buckets: Int): Unit = {
+    IndexStore.registerBucketed(spark, postTable(tag), dir(tag, "post", v),
+      "cell", buckets)
+    IndexStore.registerParquet(spark, centTable(tag), dir(tag, "cent", v))
+    IndexStore.registerParquet(spark, tombTable(tag), dir(tag, "tomb", v))
+    IndexStore.registerParquet(spark, metaTable(tag), dir(tag, "meta", v))
+    IndexStore.registerParquet(spark, idsTable(tag), dir(tag, "ids", v))
   }
 
   /** Recover an index built by a previous session (or after a crash):
-    * re-derive the catalog entries from the newest COMMITTED era's
+    * re-derive the catalog entries from the newest COMMITTED version's
     * directories — markers are the only truth, so a crash mid-compaction
-    * (era N+1 staged, no marker) recovers to the complete era N. The
+    * (version N+1 staged, no marker) recovers to the complete N. The
     * bucket count comes from the PERSISTED meta, never from the caller
     * (a mismatched CLUSTERED BY spec would silently mis-prune probe
     * joins), and the known-ids list is restated if an append crashed
@@ -122,16 +120,16 @@ object AnnIndex {
   def openIndex(spark: org.apache.spark.sql.SparkSession,
       tag: String): Unit = {
     val base = indexBase(tag)
-    val era = IndexStore.readEra(spark, base).getOrElse(
-      sys.error(s"ANN index '$tag' has no committed era"))
+    val v = VersionedStore.latest(spark, base).getOrElse(
+      sys.error(s"ANN index '$tag' has no committed version"))
     // meta read straight from its directory — the catalog entries are
     // what this call is about to (re)create
     val m = parseMeta(
-      spark.read.parquet(metaDir(base, era)).collect().head)
-    registerTables(spark, tag, era, m.buckets)
+      spark.read.parquet(dir(tag, "meta", v)).collect().head)
+    registerTables(spark, tag, v, m.buckets)
     repairKnownIds(spark, tag)
-    // reclaim any era a crashed compaction staged but never committed
-    IndexStore.gcStagedEras(spark, base)
+    // reclaim any version a crashed compaction staged but never committed
+    VersionedStore.gcStaged(spark, base)
     ()
   }
 
@@ -196,18 +194,17 @@ object AnnIndex {
   /** Build once per (tag, geometry): centroids = the id-stride coarse
     * quantizer over the build corpus, postings spill-replicated and
     * bucketed by cell, empty tombstones, the known-ids list, and gen-0
-    * meta carrying the geometry — staged under era 0, committed with
+    * meta carrying the geometry — staged as one version, committed with
     * one marker create. */
   def buildIndex(spark: org.apache.spark.sql.SparkSession,
       candidates: => DataFrame, idCol: String, vecCol: String, tag: String,
       seedStride: Int, spill: Int, buckets: Int = 8,
       maxCells: Int = DefaultMaxCells): Unit =
     graft.sources.Bucketing.ensureOnce(s"ann@$tag#$seedStride#$spill#$buckets") {
-      val base = indexBase(tag)
-      // every PUBLIC mutator holds the create-exclusive writer lock:
-      // builds, appends, and tombstone writes all race compaction's
-      // era swap (and each other's gen claims) without it
-      IndexStore.withWriterLock(spark, base) {
+      // every PUBLIC mutator holds the store's writer lock: builds,
+      // appends, and tombstone writes all race compaction's commit (and
+      // each other's gen claims) without it
+      val built = VersionedStore.publish(spark, indexBase(tag)) { v =>
         val c = candidates.select(col(idCol).as("cand_id"),
           col(vecCol).as("cv")).cache()
         val words = math.max(1, (measuredDims(c) + 31) / 32)
@@ -215,24 +212,22 @@ object AnnIndex {
           .select(col("cand_id").as("cent_id"), col("cv").as("cent_v"))
         requireCellBudget(cents.count(), c.count(), seedStride, maxCells,
           s"buildIndex($tag)")
-        IndexStore.stagePlain(cents, centDir(base, 0L))
+        IndexStore.stagePlain(cents, dir(tag, "cent", v))
         val post = withCodes(assignCells(cents, c, "cand_id", "cv", keep = spill)
           .select(col("cell"), col("cand_id"), col("cv"), lit(0L).as("gen")),
           words)
-        IndexStore.stageBucketed(post, IndexStore.postDir(base, 0L),
-          "cell", buckets)
+        IndexStore.stageBucketed(post, dir(tag, "post", v), "cell", buckets)
         IndexStore.stagePlain(
           post.select(col("cand_id"), col("gen").as("upto_gen")).limit(0),
-          IndexStore.tombDir(base, 0L))
+          dir(tag, "tomb", v))
         IndexStore.stageIds(c.select("cand_id").distinct(),
-          IndexStore.idsDir(base, 0L), "cand_id")
+          dir(tag, "ids", v), "cand_id")
         IndexStore.stagePlain(
           metaFrame(spark, Meta(0L, spill, seedStride, buckets, words)),
-          metaDir(base, 0L))
+          dir(tag, "meta", v))
         c.unpersist()
-        IndexStore.commitEra(spark, base, 0L)
       }
-      registerTables(spark, tag, 0L, buckets)
+      registerTables(spark, tag, built, buckets)
     }
 
   /** Live postings through the tombstones: a posting row serves unless
@@ -411,7 +406,7 @@ object AnnIndex {
   }
 
   /** Claim the next generation (write-ahead — see object doc): the
-    * floor is max(era meta counter, tombstone max) — both bounded
+    * floor is max(version meta counter, tombstone max) — both bounded
     * reads (1 row; ∝ deletes since compaction) — and
     * [[IndexStore.claimGen]] lands the atomic marker strictly above
     * every prior claim before any data is written at the number. The
@@ -438,7 +433,7 @@ object AnnIndex {
     * stale, which never affects serving (ids only guard ingest; gen
     * non-reuse is carried by the claim marker, which landed FIRST), and
     * [[openIndex]]'s recovery restates the ids ([[repairKnownIds]]).
-    * The era meta is NOT touched — it is immutable once staged, so no
+    * The version meta is NOT touched — it is immutable once staged, so no
     * append can leave it half-written (round-10 ADVICE). Caller
     * contract: an id is appended at most once per live generation —
     * re-adding a STILL-LIVE id makes the newest generation serve
@@ -449,9 +444,9 @@ object AnnIndex {
     // writer lock across claim + postings + ids: a racing second
     // appender would double-claim a generation (the claim marker is an
     // overwrite-create, not exclusive — the LOCK is the exclusion),
-    // and an append racing a compaction's era swap would write
-    // postings into the era being retired
-    IndexStore.withWriterLock(spark, indexBase(tag)) {
+    // and an append racing a compaction's commit would write
+    // postings into the version being retired
+    VersionedStore.withWriterLock(spark, indexBase(tag)) {
       val (_, _, b) = appendPostingsOnly(spark, batch, idCol, vecCol, tag)
       b.select("cand_id").distinct().write.mode("append").format("parquet")
         .saveAsTable(idsTable(tag))
@@ -511,9 +506,8 @@ object AnnIndex {
       .unionByName(surviving).distinct().localCheckpoint()
     val drifted = truth.count() > surviving.distinct().count()
     if (drifted) {
-      val base = indexBase(tag)
-      val era = IndexStore.readEra(spark, base).get
-      IndexStore.stageIds(truth, IndexStore.idsDir(base, era), "cand_id")
+      val v = VersionedStore.latest(spark, indexBase(tag)).get
+      IndexStore.stageIds(truth, dir(tag, "ids", v), "cand_id")
       spark.catalog.refreshTable(idsTable(tag))
     }
     drifted
@@ -558,7 +552,7 @@ object AnnIndex {
     // exists to fail fast on true concurrent writers, not to order the
     // single logical writer's own steps)
     val needCompact = doomed.limit(1).count() > 0 &&
-      IndexStore.withWriterLock(spark, indexBase(tag)) {
+      VersionedStore.withWriterLock(spark, indexBase(tag)) {
         doomed.write.mode("append").format("parquet")
           .saveAsTable(tombTable(tag))
         spark.catalog.refreshTable(tombTable(tag))
@@ -568,11 +562,11 @@ object AnnIndex {
   }
 
   /** Physically drop tombstoned postings: stage the filtered postings,
-    * centroids, empty tombstones, known ids, and meta under era N+1,
-    * commit with one marker create, re-register, drop era N — a crash
-    * mid-compaction leaves era N complete and servable (the IndexStore
-    * contract), and retention is automatic (old eras can no longer
-    * accumulate unbounded under continuous maintenance).
+    * centroids, empty tombstones, known ids, and meta as version N+1,
+    * commit with one marker create, re-register, drop version N — a
+    * crash mid-compaction leaves N complete and servable (the
+    * VersionedStore contract), and retention is automatic (old versions
+    * can no longer accumulate unbounded under continuous maintenance).
     *
     * `recluster = true` additionally re-derives the coarse quantizer
     * from the LIVE corpus — the remediation path for the drift
@@ -585,7 +579,7 @@ object AnnIndex {
   def compactIndex(spark: org.apache.spark.sql.SparkSession, tag: String,
       recluster: Boolean = false): Unit = {
     val base = indexBase(tag)
-    IndexStore.withWriterLock(spark, base) {
+    VersionedStore.withWriterLock(spark, base) {
       compactIndexLocked(spark, tag, recluster)
     }
   }
@@ -593,10 +587,8 @@ object AnnIndex {
   private def compactIndexLocked(spark: org.apache.spark.sql.SparkSession,
       tag: String, recluster: Boolean): Unit = {
     val base = indexBase(tag)
-    val era = IndexStore.readEra(spark, base).get
-    val next = era + 1
     val m = readMeta(spark, tag)
-    // fold the generation watermark into the new era's (immutable)
+    // fold the generation watermark into the new version's (immutable)
     // meta, so the claim markers can be truncated after the commit —
     // the floor survives in 1 row, and any marker lost to a crash
     // mid-truncation is harmless (only the max is observable)
@@ -619,7 +611,7 @@ object AnnIndex {
         // GUARD (round-10 ADVICE, medium): if deletions removed every
         // seed-stride id, the re-derived quantizer is EMPTY — assigning
         // against it would stage zero postings and commit an empty
-        // index while retention deletes the old era (silent loss of the
+        // index while retention deletes the old version (silent loss of the
         // whole live corpus). Fall back to the frozen centroids: the
         // compaction still physically drops tombstoned rows; only the
         // re-clustering is declined.
@@ -632,19 +624,19 @@ object AnnIndex {
             m.words), c)
         }
       }
-    IndexStore.stageBucketed(post, IndexStore.postDir(base, next),
-      "cell", m.buckets)
-    IndexStore.stagePlain(cents, centDir(base, next))
-    IndexStore.stagePlain(
-      post.select(col("cand_id"), col("gen").as("upto_gen")).limit(0),
-      IndexStore.tombDir(base, next))
-    IndexStore.stageIds(post.select("cand_id").distinct(),
-      IndexStore.idsDir(base, next), "cand_id")
-    IndexStore.stagePlain(metaFrame(spark, m.copy(gen = watermark)),
-      metaDir(base, next))
-    IndexStore.commitEra(spark, base, next)
+    val next = VersionedStore.publishLocked(spark, base) { v =>
+      IndexStore.stageBucketed(post, dir(tag, "post", v), "cell", m.buckets)
+      IndexStore.stagePlain(cents, dir(tag, "cent", v))
+      IndexStore.stagePlain(
+        post.select(col("cand_id"), col("gen").as("upto_gen")).limit(0),
+        dir(tag, "tomb", v))
+      IndexStore.stageIds(post.select("cand_id").distinct(),
+        dir(tag, "ids", v), "cand_id")
+      IndexStore.stagePlain(metaFrame(spark, m.copy(gen = watermark)),
+        dir(tag, "meta", v))
+    }
     registerTables(spark, tag, next, m.buckets)
-    IndexStore.dropOldEras(spark, base, keep = next)
+    VersionedStore.retainFrom(spark, base, next)
     IndexStore.truncateGenClaims(spark, base, upto = watermark)
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.VersionedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,10 +9,12 @@ import org.apache.spark.sql.functions._
   * 7-day expiry, oldest-first eviction; gzip is subsumed by parquet's
   * own compression).
   *
-  * Layout: `dir/_index` parquet (cache_key, created_ms, expiry_ms) +
-  * one payload parquet dir per key. Single-writer discipline, like every
-  * mutation in this engine (SURVEY §7.4.2). The clock is injectable for
-  * deterministic tests.
+  * Layout: `dir/_index` is a single-table [[VersionedStore]] of
+  * (cache_key, created_ms, expiry_ms) rows, plus one payload parquet dir
+  * per key. Each put commits the next index version and keeps the one
+  * before it, so a crash mid-put leaves the prior index serving [[get]].
+  * Single-writer discipline, like every mutation in this engine (SURVEY
+  * §7.4.2). The clock is injectable for deterministic tests.
   */
 final class CacheStore(spark: SparkSession, dir: String, ttlMs: Long,
     maxEntries: Int, now: () => Long = () => System.currentTimeMillis()) {
@@ -24,15 +27,12 @@ final class CacheStore(spark: SparkSession, dir: String, ttlMs: Long,
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def indexOpt(): Option[DataFrame] =
-    if (fs.exists(new org.apache.hadoop.fs.Path(indexPath)))
-      Some(spark.read.parquet(indexPath))
-    else None
+    VersionedStore.latest(spark, indexPath)
+      .map(v => spark.read.parquet(VersionedStore.verDir(indexPath, v)))
 
   private def writeIndex(df: DataFrame): Unit = {
-    val tmp = indexPath + ".tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(indexPath))
+    val v = VersionedStore.commit(spark, indexPath, df.coalesce(1))
+    VersionedStore.retainFrom(spark, indexPath, v - 1)
   }
 
   /** Cache key for a criteria map — md5 of the sorted, normalized
@@ -72,7 +72,7 @@ final class CacheStore(spark: SparkSession, dir: String, ttlMs: Long,
     // drop payload dirs no longer indexed
     fs.listStatus(new org.apache.hadoop.fs.Path(dir)).foreach { f =>
       val n = f.getPath.getName
-      if (f.isDirectory && n != "_index" && !n.endsWith(".tmp") && !keep.contains(n))
+      if (f.isDirectory && n != "_index" && !keep.contains(n))
         fs.delete(f.getPath, true)
     }
   }

@@ -53,24 +53,16 @@ object Dedup {
 
   /** Threshold-verified Jaccard over attached (hs_a, hs_b) candidate
     * rows — the verify tail shared by the MinHash/prefix families,
-    * factored so the intersect is planned EXACTLY ONCE (r16, guide §4).
-    * The naive withColumn+filter form lets Catalyst push the threshold
-    * predicate into the verify join's CONDITION, where
-    * size(array_intersect(..)) evaluates per candidate on both sides of
-    * the >= comparison and then AGAIN in the output projection — 3
-    * intersections per pair, measured as 24 s of dd_paragraph's 26 s
-    * final-stage CPU at sf0.1. explode(array(expr)) is a one-element
-    * Generate: deterministic predicates referencing generator output are
-    * not pushed below a Generate, so the intersect stays a single
-    * evaluation and the join condition stays the bare equi-join. Row
-    * count is unchanged (the array always holds exactly one element),
-    * and jaccard is the same exact-integer-ratio double. */
+    * factored so the intersect is planned EXACTLY ONCE behind
+    * [[EvalOnce]] (3 intersections per pair without it, measured as 24 s
+    * of dd_paragraph's 26 s final-stage CPU at sf0.1). jaccard is the
+    * same exact-integer-ratio double. */
   private def jaccardAtLeast(joined: DataFrame, threshold: Double,
       aCol: String, bCol: String): DataFrame =
     joined
       .select(col(aCol), col(bCol), size(col("hs_a")).as("sz_a"),
         size(col("hs_b")).as("sz_b"),
-        explode(array(size(array_intersect(col("hs_a"), col("hs_b")))))
+        EvalOnce(size(array_intersect(col("hs_a"), col("hs_b"))))
           .as("inter"))
       .withColumn("jaccard", col("inter").cast("double") /
         (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
@@ -440,13 +432,10 @@ object Dedup {
         .toInt, col("id_b"))
     val sa = docs.select(col("id").as("id_a"), col("hs").as("hs_a"))
     val sb = docs.select(col("id").as("id_b"), col("hs").as("hs_b"))
-    // the intersect evaluates ONCE behind a one-element Generate (the
-    // jaccardAtLeast rationale): the plain withColumn+filter form pushed
-    // the threshold into the verify join's condition, where the
-    // ~10³-element array_intersect ran a second time per passing pair
+    // the ~10³-element intersect evaluates ONCE behind EvalOnce
     cand.join(sa, "id_a").join(sb, "id_b")
       .select(col("id_a"), col("id_b"), size(col("hs_a")).as("sz_a"),
-        explode(array(size(array_intersect(col("hs_a"), col("hs_b")))))
+        EvalOnce(size(array_intersect(col("hs_a"), col("hs_b"))))
           .as("inter"))
       .withColumn("containment",
         col("inter").cast("double") / col("sz_a").cast("double"))

@@ -166,20 +166,15 @@ object FuzzyJoin {
         val ro = udf((x: String, y: String) => roRatio(x, y))
         (x, y) => ro(x, y)
       } else levSimilarity
-    // token_sim/fuzzy_sim are computed behind a one-element
-    // explode(array(struct(..))) Generate (r16, guide §4): the plain
-    // withColumn form let Catalyst push the confidence floor into the
-    // company join's CONDITION, where the substituted CASE chains
-    // inlined tokenJaccard's array_intersect ~20× and the Levenshtein
-    // scorer 5× PER CANDIDATE ROW (read the executed plan, not the DSL).
-    // Predicates on generator output are not pushed below a Generate, so
-    // each scorer now evaluates exactly once per candidate; rows and
-    // values are unchanged (the array always holds one element).
+    // token_sim/fuzzy_sim behind EvalOnce: the confidence floor would
+    // otherwise land in the company join's CONDITION, inlining
+    // tokenJaccard's array_intersect ~20× and the Levenshtein scorer 5×
+    // per candidate row
     val scored = cand.join(a, "applicant_id").join(c, "company_id")
-      .withColumn("s", explode(array(struct(
+      .withColumn("s", EvalOnce(struct(
         TextFunctions.tokenJaccard(col("a_tokens"), col("c_tokens"))
           .as("token_sim"),
-        fuzzyScore(col("a_base"), col("c_base")).as("fuzzy_sim")))))
+        fuzzyScore(col("a_base"), col("c_base")).as("fuzzy_sim"))))
       .withColumn("token_sim", col("s.token_sim"))
       .withColumn("fuzzy_sim", col("s.fuzzy_sim"))
       .drop("s")

@@ -3,123 +3,44 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Era-addressed storage for served indexes (BM25 postings, phrase
-  * postings) — the atomic-swap layer under their maintenance cycles.
+/** Storage helpers for served indexes (BM25 postings, phrase postings,
+  * ANN cells): the writers that stage an index's tables, the catalog
+  * registration that re-opens them, and write-ahead generation claims.
   *
-  * An index's tables (postings / stats / tombstones) live in ERA
-  * directories: `base/post_e0`, `base/stats_e0`, `base/tomb_e0`, then
-  * `..._e1` after the first compaction, and so on. Which era is live is
-  * decided by MARKER FILES under `base/era/` — `e_0`, `e_1`, … — and
-  * the rule "largest marker wins". Committing era N is ONE filesystem
-  * create (`era/e_N`), issued only after every table of era N is fully
-  * staged, so there is no window in which a reader can observe a
-  * half-written index:
+  * Publishing is [[graft.sources.VersionedStore]]'s: an index's tables
+  * (postings / stats / tombstones / known ids, plus ANN's centroids and
+  * meta) are staged as member tables of version N under
+  * `base/<name>_v_N` ([[graft.sources.VersionedStore.tableDir]]), and
+  * one marker create `base/ver/c_N` commits them together. Compaction
+  * stages version N+1 in fresh directories, so a crash before its
+  * marker leaves version N newest and untouched, and a crash after it
+  * leaves N+1 complete by construction. Appends, tombstones and the
+  * 1-row stats write land in place inside the live version, each
+  * covered by its family's repair pass.
   *
-  *  - crash BEFORE the marker lands → recovery reads the old marker and
-  *    serves the old era, whose directories are untouched (compaction
-  *    stages into fresh directories, never in place);
-  *  - crash AFTER → the new era is complete by construction.
-  *
-  * Tombstones are era-scoped ON PURPOSE: compaction folds them into the
-  * new era's postings and stages an EMPTY tomb table, so the swap
-  * retires the postings and their tombstones in the same atomic step —
-  * a manifest that swapped only the postings would double-apply the
-  * old tombstones' stats corrections.
+  * Tombstones are version-scoped ON PURPOSE: compaction folds them into
+  * the new version's postings and stages an EMPTY tomb table, so the
+  * commit retires the postings and their tombstones in the same atomic
+  * step — a manifest that swapped only the postings would double-apply
+  * the old tombstones' stats corrections.
   *
   * The reference keeps its sync state as SQLite rows rewritten in place
   * (DatabaseConverter/database.py); at warehouse scale the equivalent
-  * durable primitive is exactly this: immutable staged directories plus
-  * a single-file commit point (the Iceberg/Delta snapshot-pointer idea,
-  * reduced to what a filesystem gives for free).
+  * durable primitive is immutable staged directories plus a single-file
+  * commit point (the Iceberg/Delta snapshot-pointer idea, reduced to
+  * what a filesystem gives for free).
   *
   * Catalog entries are per-JVM (in-memory session catalog), so
   * registration is re-derivable state: [[registerParquet]] /
-  * [[registerBucketed]] re-create the table entry over the era
+  * [[registerBucketed]] re-create the table entry over the version's
   * directory with the schema inferred from the parquet footers —
   * which is how a fresh session "opens" an index from nothing but the
   * marker files.
   */
 object IndexStore {
 
-  def postDir(base: String, era: Long): String = s"$base/post_e$era"
-  def statsDir(base: String, era: Long): String = s"$base/stats_e$era"
-  def tombDir(base: String, era: Long): String = s"$base/tomb_e$era"
-
-  /** Compact known-ids table — the ∝-index-cardinality id list ingest
-    * guards anti-join against, so a per-micro-batch redelivery check
-    * never scans the full postings (round-9 verdict item 3). */
-  def idsDir(base: String, era: Long): String = s"$base/ids_e$era"
-
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Live era = max N over `base/era/e_N` markers; None before the
-    * first [[commitEra]] (index never built). */
-  def readEra(spark: SparkSession, base: String): Option[Long] = {
-    val dir = new Path(s"$base/era")
-    val f = fs(spark, base)
-    if (!f.exists(dir)) None
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("e_") => n.drop(2).toLong }
-      .sorted.lastOption
-  }
-
-  /** THE commit point: one file create. Everything of era N must
-    * already be staged under its directories. Fence-checked: a writer
-    * whose lease was usurped (paused past the TTL) aborts HERE, before
-    * the marker makes its staged era visible. */
-  def commitEra(spark: SparkSession, base: String, era: Long): Unit = {
-    LeaseLock.fenceCheck()
-    val f = fs(spark, base)
-    f.mkdirs(new Path(s"$base/era"))
-    f.create(new Path(s"$base/era/e_$era"), true).close()
-  }
-
-  /** Drop eras strictly older than `keep`: their markers first (so a
-    * crash mid-cleanup can only leave unreferenced directories, never a
-    * marker pointing at deleted data), then EVERY table directory of
-    * that era — matched by the `_e<N>` suffix, so index families with
-    * extra per-era tables (ANN's centroids/meta, the known-ids lists)
-    * are cleaned without each family maintaining its own deletion
-    * list. The underscore in the suffix keeps `_e1` from matching
-    * `_e12`. */
-  def dropOldEras(spark: SparkSession, base: String, keep: Long): Unit = {
-    val f = fs(spark, base)
-    val baseP = new Path(base)
-    (0L until keep).foreach { e =>
-      f.delete(new Path(s"$base/era/e_$e"), false)
-      if (f.exists(baseP))
-        f.listStatus(baseP).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.endsWith(s"_e$e"))
-          .foreach(s => f.delete(s.getPath, true))
-    }
-  }
-
-  /** Delete STAGED-BUT-UNCOMMITTED era directories — the leftovers of a
-    * compaction that crashed between stage and commit. The marker
-    * discipline makes them unreachable garbage (never servable), but
-    * each failed compaction would otherwise leak a full staged copy of
-    * the index. A `*_e<N>` directory is garbage exactly when marker
-    * `era/e_N` does not exist. Call ONLY from a recovery path
-    * (openIndex): the single-writer contract guarantees no compaction
-    * is staging concurrently. Returns the deleted directory names. */
-  def gcStagedEras(spark: SparkSession, base: String): Seq[String] = {
-    val f = fs(spark, base)
-    val baseP = new Path(base)
-    if (!f.exists(baseP)) Seq.empty
-    else {
-      val suffix = "_e(\\d+)$".r
-      f.listStatus(baseP).toSeq
-        .filter(_.isDirectory)
-        .flatMap { s =>
-          val name = s.getPath.getName
-          suffix.findFirstMatchIn(name).map(m => (s.getPath, name, m.group(1).toLong))
-        }
-        .filter { case (_, _, e) => !f.exists(new Path(s"$base/era/e_$e")) }
-        .map { case (p, name, _) => f.delete(p, true); name }
-    }
-  }
 
   /** Register `table` over an existing parquet directory, schema
     * inferred from the footers. Replaces any prior entry (external
@@ -187,20 +108,20 @@ object IndexStore {
   // a silent no-serve). Deriving the max by scanning the postings is
   // crash-proof but prices every append at one corpus pass. Instead:
   // an append CLAIMS its generation up front with one atomic marker
-  // create (`base/gen/g_<n>`, same primitive as the era markers), and
+  // create (`base/gen/g_<n>`, same primitive as the version markers), and
   // the next claim is max(markers, floor)+1. Because the claim lands
   // BEFORE the postings write, a crash at ANY later point leaves the
   // marker ≥ every generation in the data — non-reuse holds
   // unconditionally, no recovery pass required. A crash between claim
   // and postings merely skips a number. Claims are O(appends since
   // compaction) to list; compaction folds the watermark into the new
-  // era's meta and truncates the markers ([[truncateGenClaims]]).
+  // version's meta and truncates the markers ([[truncateGenClaims]]).
   // ------------------------------------------------------------------
 
   private def genMarkerDir(base: String) = new Path(s"$base/gen")
 
   /** Max generation ever claimed, or None before the first claim (or
-    * after a truncation folded the watermark into the era meta). */
+    * after a truncation folded the watermark into the version meta). */
   def maxClaimedGen(spark: SparkSession, base: String): Option[Long] = {
     val dir = genMarkerDir(base)
     val f = fs(spark, base)
@@ -225,31 +146,9 @@ object IndexStore {
   }
 
   /** Drop claim markers ≤ `upto` — called by compaction AFTER the new
-    * era (whose meta persists `upto` as the counter floor) committed.
+    * version (whose meta persists `upto` as the counter floor) committed.
     * Deleting low markers never lowers the observable max, so a crash
     * mid-truncation is harmless. */
-  /** Single-writer enforcement for a store base directory — the
-    * index-store analog of the TableStore mutator lock
-    * (graft.sources.Catalog): a LEASE on `base/__lock` held for the
-    * duration of a stage+commit cycle, so two concurrent compactions
-    * (or versioned commits) fail fast instead of racing the same
-    * staged era/version directory. The reference serializes the
-    * equivalent through Postgres row locks + scheduler
-    * max_instances=1 (SURVEY §7.4.2). A writer killed INSIDE the
-    * critical section no longer wedges the store: its lease stops
-    * heartbeating and the next writer steals it after the TTL,
-    * unattended ([[LeaseLock]]; round-11 ADVICE). The staged data
-    * itself needs no repair: the marker discipline means an
-    * interrupted holder never published anything, and openIndex/gc
-    * reclaims its orphans. */
-  def withWriterLock[T](spark: SparkSession, base: String,
-      ttlMs: Long = LeaseLock.DefaultTtlMs)(body: => T): T = {
-    val f = fs(spark, base)
-    f.mkdirs(new Path(base))
-    LeaseLock.withLease(f, new Path(s"$base/__lock"),
-      s"store $base", ttlMs)(body)
-  }
-
   def truncateGenClaims(spark: SparkSession, base: String,
       upto: Long): Unit = {
     val dir = genMarkerDir(base)

@@ -31,8 +31,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    heartbeat goes silent, its release leaves B's lock untouched,
   *    and its exit THROWS so the job cannot report success; commit
   *    points inside the stores call [[fenceCheck]] right before their
-  *    atomic publish (era marker / version marker / table swap), so a
-  *    usurped writer aborts BEFORE making its work visible.
+  *    atomic publish (the version marker create), so a usurped
+  *    writer aborts BEFORE making its work visible.
   *
   * The TTL trade: too short and a paused-but-alive writer (GC storm,
   * CPU starvation beyond ttl·3/4) can be usurped — now detected and
@@ -41,9 +41,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * 2.5 min tolerate pathological pauses, while unattended recovery
   * needs no human in the loop. Tests pass a small ttl.
   *
-  * This replaces the bodies of IndexStore.withWriterLock and the
-  * TableStore mutator lock — one lease discipline for all three
-  * stores. */
+  * Every store takes this lease through
+  * [[graft.sources.VersionedStore.withWriterLock]] on its base directory
+  * — catalog tables, served indexes, views, the result cache and the
+  * harvest alike — so one lease discipline guards the one publish
+  * path. */
 object LeaseLock {
 
   val DefaultTtlMs: Long = 10 * 60 * 1000L
@@ -64,7 +66,7 @@ object LeaseLock {
       }
 
     /** The fencing check: call immediately before an atomic publish
-      * (marker create, table-swap rename). Throws if the lease was
+      * (the version marker create). Throws if the lease was
       * usurped, so a paused-then-resumed writer aborts BEFORE its work
       * becomes visible. */
     def checkOwned(): Unit =

@@ -207,24 +207,20 @@ object MatView {
   // ---- streaming integration ----------------------------------------
   //
   // Storage discipline: every maintained store (view or base) is a
-  // graft.sources.VersionedStore — stage the full next snapshot, commit
-  // with ONE marker-file create, retain the last two versions. The
-  // first cut used delete-then-rename swaps, which had a
-  // no-servable-view crash window between the delete and the rename
-  // (and lost the view entirely on a crash inside it, with
-  // rebuild-from-base as the undocumented repair). The marker
-  // discipline is the one IndexStore/VersionedStore already proved:
-  // a crash before the marker leaves the previous version latest and
-  // fully servable; an orphaned staged directory is garbage that the
-  // retry overwrites. Reading the current state is
-  // VersionedStore.readLatest(viewDir).
+  // graft.sources.VersionedStore, the engine's one publish path — stage
+  // the full next snapshot, commit with ONE marker-file create, retain
+  // the last two versions. A crash before the marker leaves the
+  // previous version latest and fully servable; an orphaned staged
+  // directory is garbage that the retry overwrites. Reading the current
+  // state is VersionedStore.readLatest(viewDir).
 
   import graft.sources.VersionedStore
 
   private def readLatestOr(spark: org.apache.spark.sql.SparkSession,
       base: String, empty: => DataFrame): DataFrame =
     VersionedStore.latest(spark, base)
-      .map(v => VersionedStore.read(spark, base, v)).getOrElse(empty)
+      .map(v => spark.read.parquet(VersionedStore.verDir(base, v)))
+      .getOrElse(empty)
 
   /** Commit the next version of a maintained store and retire all but
     * the previous one (keep-2: a reader of the prior latest is never

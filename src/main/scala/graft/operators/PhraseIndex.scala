@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.VersionedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,11 +28,12 @@ import org.apache.spark.sql.functions._
   * so the maintenance cycle comes with it.
   *
   * Maintenance mirrors the BM25 index 1:1 on the same [[IndexStore]]
-  * era layout: generation-stamped appends ([[appendToPhraseIndex]]),
+  * versioned layout: generation-stamped appends ([[appendToPhraseIndex]]),
   * tombstone retraction with an ENFORCED broadcast bound
   * ([[deleteFromPhraseIndex]] auto-compacts past the cap), upsert =
-  * tombstone-then-append, and ATOMIC compaction (stage era N+1, commit
-  * with one marker create, old era untouched until after the commit).
+  * tombstone-then-append, and ATOMIC compaction (stage version N+1,
+  * commit with one marker create, version N untouched until after the
+  * commit).
   * The only structural difference from BM25: no corpus-stats row is
   * needed for ranking (occurrence count is per-doc), so the 1-row meta
   * table carries just the append generation and the indexed lengths.
@@ -76,39 +78,41 @@ object PhraseIndex {
         min("pos").cast("long").as("first_pos"))
   }
 
-  private def registerTables(spark: SparkSession, tag: String, era: Long,
+  private def dir(tag: String, table: String, v: Long) =
+    VersionedStore.tableDir(indexBase(tag), table, v)
+
+  private def registerTables(spark: SparkSession, tag: String, v: Long,
       buckets: Int): Unit = {
-    val base = indexBase(tag)
-    IndexStore.registerBucketed(spark, postTable(tag),
-      IndexStore.postDir(base, era), "w", buckets)
-    IndexStore.registerParquet(spark, metaTable(tag),
-      IndexStore.statsDir(base, era))
-    IndexStore.registerParquet(spark, tombTable(tag),
-      IndexStore.tombDir(base, era))
-    IndexStore.registerParquet(spark, idsTable(tag),
-      IndexStore.idsDir(base, era))
+    IndexStore.registerBucketed(spark, postTable(tag), dir(tag, "post", v),
+      "w", buckets)
+    IndexStore.registerParquet(spark, metaTable(tag), dir(tag, "stats", v))
+    IndexStore.registerParquet(spark, tombTable(tag), dir(tag, "tomb", v))
+    IndexStore.registerParquet(spark, idsTable(tag), dir(tag, "ids", v))
   }
 
-  /** Recover the catalog entries from the newest committed era — the
+  /** The newest committed version of the index. */
+  private def liveVersion(spark: SparkSession, tag: String): Long =
+    VersionedStore.latest(spark, indexBase(tag)).getOrElse(
+      sys.error(s"phrase index '$tag' has no committed version"))
+
+  /** Recover the catalog entries from the newest committed version — the
     * fresh-session / post-crash entry point (same contract as
     * [[Retrieval.openIndex]]). */
   def openIndex(spark: SparkSession, tag: String, buckets: Int = 8): Unit = {
-    val era = IndexStore.readEra(spark, indexBase(tag)).getOrElse(
-      sys.error(s"phrase index '$tag' has no committed era"))
-    registerTables(spark, tag, era, buckets)
+    registerTables(spark, tag, liveVersion(spark, tag), buckets)
     repairKnownIds(spark, tag)
-    // reclaim any era a crashed compaction staged but never committed
-    IndexStore.gcStagedEras(spark, indexBase(tag))
+    // reclaim any version a crashed compaction staged but never committed
+    VersionedStore.gcStaged(spark, indexBase(tag))
     ()
   }
 
   private def writeMeta(spark: SparkSession, tag: String, gen: Long,
-      lengths: Seq[Int], era: Long): Unit = {
+      lengths: Seq[Int], v: Long): Unit = {
     import spark.implicits._
     IndexStore.stagePlain(
       Seq((gen, lengths.distinct.sorted.mkString(",")))
         .toDF("gen", "lens"),
-      IndexStore.statsDir(indexBase(tag), era))
+      dir(tag, "stats", v))
   }
 
   private def readMeta(spark: SparkSession, tag: String): (Long, Seq[Int]) = {
@@ -119,31 +123,26 @@ object PhraseIndex {
 
   /** Build the stored phrase index once per (tag, geometry): window
     * postings for the declared lengths at generation 0, the 1-row meta
-    * table, an empty tombstone table — staged under era 0, committed
+    * table, an empty tombstone table — staged as one version, committed
     * with one marker create. The ONLY place the corpus is read. */
   def buildPhraseIndex(spark: SparkSession, docs: => DataFrame,
       idCol: String, textCol: String, tag: String, lengths: Seq[Int],
       buckets: Int = 8): Unit =
     graft.sources.Bucketing.ensureOnce(s"phrase@$tag#$buckets") {
-      val base = indexBase(tag)
-      // writer lock for the stage+commit cycle — the same single-writer
-      // discipline every other public mutator of this store enforces
-      IndexStore.withWriterLock(spark, base) {
+      val built = VersionedStore.publish(spark, indexBase(tag)) { v =>
         val d = docs.cache()
         val post = windowPostings(d, idCol, textCol, lengths)
           .withColumn("gen", lit(0L))
-        IndexStore.stageBucketed(post, IndexStore.postDir(base, 0L),
-          "w", buckets)
-        writeMeta(spark, tag, 0L, lengths, era = 0L)
+        IndexStore.stageBucketed(post, dir(tag, "post", v), "w", buckets)
+        writeMeta(spark, tag, 0L, lengths, v)
         IndexStore.stagePlain(
           post.select(col(idCol), col("gen").as("upto_gen")).limit(0),
-          IndexStore.tombDir(base, 0L))
+          dir(tag, "tomb", v))
         IndexStore.stagePlain(d.select(col(idCol)).distinct(),
-          IndexStore.idsDir(base, 0L))
+          dir(tag, "ids", v))
         d.unpersist()
-        IndexStore.commitEra(spark, base, 0L)
       }
-      registerTables(spark, tag, 0L, buckets)
+      registerTables(spark, tag, built, buckets)
     }
 
   /** The stored postings through their tombstones — merge-on-read,
@@ -308,8 +307,8 @@ object PhraseIndex {
       s"phrase index '$tag' must be initialized by buildPhraseIndex first")
     // writer lock across the gen derivation + postings/ids/meta writes
     // (racing appenders would share a generation; an append racing a
-    // compaction's era swap would write into the era being retired)
-    IndexStore.withWriterLock(spark, indexBase(tag)) {
+    // compaction's commit would write into the version being retired)
+    VersionedStore.withWriterLock(spark, indexBase(tag)) {
     val (gen, lens) = readMeta(spark, tag)
     // clear the stored counter AND every tombstone — a stale counter
     // after an append crash must not land a delete→re-add at its own
@@ -329,8 +328,7 @@ object PhraseIndex {
     b.select(col(idCol)).distinct().write.mode("append").format("parquet")
       .saveAsTable(idsTable(tag))
     b.unpersist()
-    val era = IndexStore.readEra(spark, indexBase(tag)).get
-    writeMeta(spark, tag, next, lens, era)
+    writeMeta(spark, tag, next, lens, liveVersion(spark, tag))
     spark.catalog.refreshTable(postTable(tag))
     spark.catalog.refreshTable(idsTable(tag))
     spark.catalog.refreshTable(metaTable(tag))
@@ -357,9 +355,8 @@ object PhraseIndex {
       .distinct().localCheckpoint()
     val drifted = truth.count() > surviving.distinct().count()
     if (drifted) {
-      val base = indexBase(tag)
-      val era = IndexStore.readEra(spark, base).get
-      IndexStore.stageIds(truth, IndexStore.idsDir(base, era), idCol)
+      IndexStore.stageIds(truth, dir(tag, "ids", liveVersion(spark, tag)),
+        idCol)
       spark.catalog.refreshTable(idsTable(tag))
     }
     drifted
@@ -393,8 +390,7 @@ object PhraseIndex {
     val (cur, lens) = readMeta(spark, tag)
     val drifted = cur != want
     if (drifted) {
-      val era = IndexStore.readEra(spark, indexBase(tag)).get
-      writeMeta(spark, tag, want, lens, era)
+      writeMeta(spark, tag, want, lens, liveVersion(spark, tag))
       spark.catalog.refreshTable(metaTable(tag))
     }
     drifted
@@ -419,7 +415,7 @@ object PhraseIndex {
     // release (withWriterLock is not re-entrant and compactPhraseIndex
     // takes its own hold)
     val needCompact = doomed.limit(1).count() > 0 &&
-      IndexStore.withWriterLock(spark, indexBase(tag)) {
+      VersionedStore.withWriterLock(spark, indexBase(tag)) {
         doomed.write.mode("append").format("parquet")
           .saveAsTable(tombTable(tag))
         spark.catalog.refreshTable(tombTable(tag))
@@ -441,17 +437,17 @@ object PhraseIndex {
     b.unpersist()
   }
 
-  /** Atomic compaction: stage era N+1 (live postings with tombstones
+  /** Atomic compaction: stage version N+1 (live postings with tombstones
     * folded in, meta, empty tombstones), commit with one marker create,
-    * re-point the catalog, drop era N. Crash before the marker → era N
+    * re-point the catalog, drop version N. Crash before the marker → N
     * serves untouched via [[openIndex]]. Returns (filesBefore,
     * filesAfter) for the postings store. */
   def compactPhraseIndex(spark: SparkSession, tag: String, idCol: String,
       buckets: Int = 8): (Int, Int) = {
     val before = parquetFileCount(spark, tag)
-    // create-exclusive base/__lock: two concurrent compactions would
-    // race the same staged era directory — the second fails fast
-    IndexStore.withWriterLock(spark, indexBase(tag)) {
+    // writer lock: two concurrent compactions would race the same
+    // staged version directory — the second fails fast
+    VersionedStore.withWriterLock(spark, indexBase(tag)) {
       val next = compactStage(spark, tag, idCol, buckets)
       compactCommit(spark, tag, next, buckets)
     }
@@ -460,9 +456,7 @@ object PhraseIndex {
 
   private def parquetFileCount(spark: SparkSession, tag: String): Int = {
     import org.apache.hadoop.fs.Path
-    val base = indexBase(tag)
-    val era = IndexStore.readEra(spark, base).get
-    val loc = new Path(IndexStore.postDir(base, era))
+    val loc = new Path(dir(tag, "post", liveVersion(spark, tag)))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(loc)
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
@@ -470,30 +464,26 @@ object PhraseIndex {
 
   private[graft] def compactStage(spark: SparkSession, tag: String,
       idCol: String, buckets: Int): Long = {
-    val base = indexBase(tag)
-    val era = IndexStore.readEra(spark, base).get
-    val next = era + 1
+    val next = liveVersion(spark, tag) + 1
     val (gen, lens) = readMeta(spark, tag)
     // same one-task-per-bucket rewrite as Retrieval.compactStage: the
     // shuffle hash IS the bucket hash, so `buckets` tasks → `buckets`
     // files, a real small-file merge
     val postSnap = livePostings(spark, tag, idCol).localCheckpoint()
       .repartition(buckets, col("w"))
-    IndexStore.stageBucketed(postSnap, IndexStore.postDir(base, next),
-      "w", buckets)
-    writeMeta(spark, tag, gen, lens, era = next)
+    IndexStore.stageBucketed(postSnap, dir(tag, "post", next), "w", buckets)
+    writeMeta(spark, tag, gen, lens, next)
     IndexStore.stagePlain(spark.table(tombTable(tag)).limit(0),
-      IndexStore.tombDir(base, next))
+      dir(tag, "tomb", next))
     IndexStore.stagePlain(postSnap.select(col(idCol)).distinct(),
-      IndexStore.idsDir(base, next))
+      dir(tag, "ids", next))
     next
   }
 
   private[graft] def compactCommit(spark: SparkSession, tag: String,
-      era: Long, buckets: Int): Unit = {
-    val base = indexBase(tag)
-    IndexStore.commitEra(spark, base, era)
-    registerTables(spark, tag, era, buckets)
-    IndexStore.dropOldEras(spark, base, keep = era)
+      v: Long, buckets: Int): Unit = {
+    VersionedStore.commitVersion(spark, indexBase(tag), v)
+    registerTables(spark, tag, v, buckets)
+    VersionedStore.retainFrom(spark, indexBase(tag), v)
   }
 }

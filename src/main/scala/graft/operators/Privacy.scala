@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.VersionedStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.PortableLn
@@ -181,7 +182,7 @@ object Privacy {
   def chargeBudget(spark: org.apache.spark.sql.SparkSession, base: String,
       label: String, eps: Double, budget: Double): Double = {
     require(eps > 0 && budget > 0, "epsilon and budget must be positive")
-    IndexStore.withWriterLock(spark, base) {
+    VersionedStore.withWriterLock(spark, base) {
       val rows = ledger(spark, base)
       val spent = rows.map(_._2).sum
       rows.find(_._1 == label) match {

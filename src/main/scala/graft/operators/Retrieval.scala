@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.VersionedStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -246,69 +247,67 @@ object Retrieval {
     * of rows). */
   val DefaultMaxTombstones = 1000000L
 
-  /** (Re)register the index's three tables over era `era`'s
-    * directories — derivable state, also the recovery path a fresh
-    * session takes via [[openIndex]]. */
+  private def dir(tag: String, table: String, v: Long) =
+    VersionedStore.tableDir(indexBase(tag), table, v)
+
+  /** (Re)register the index's tables over version `v`'s directories —
+    * derivable state, also the recovery path a fresh session takes via
+    * [[openIndex]]. */
   private def registerTables(spark: org.apache.spark.sql.SparkSession,
-      tag: String, era: Long, buckets: Int): Unit = {
-    val base = indexBase(tag)
-    IndexStore.registerBucketed(spark, postTable(tag),
-      IndexStore.postDir(base, era), "term", buckets)
-    IndexStore.registerParquet(spark, statsTable(tag),
-      IndexStore.statsDir(base, era))
-    IndexStore.registerParquet(spark, tombTable(tag),
-      IndexStore.tombDir(base, era))
-    IndexStore.registerParquet(spark, idsTable(tag),
-      IndexStore.idsDir(base, era))
+      tag: String, v: Long, buckets: Int): Unit = {
+    IndexStore.registerBucketed(spark, postTable(tag), dir(tag, "post", v),
+      "term", buckets)
+    IndexStore.registerParquet(spark, statsTable(tag), dir(tag, "stats", v))
+    IndexStore.registerParquet(spark, tombTable(tag), dir(tag, "tomb", v))
+    IndexStore.registerParquet(spark, idsTable(tag), dir(tag, "ids", v))
   }
+
+  /** The newest committed version of the index. */
+  private def liveVersion(spark: org.apache.spark.sql.SparkSession,
+      tag: String): Long =
+    VersionedStore.latest(spark, indexBase(tag)).getOrElse(
+      sys.error(s"index '$tag' has no committed version at ${indexBase(tag)}"))
 
   /** Open an index built by a PREVIOUS session (or recover after a
     * crash): re-derive the catalog entries from the newest committed
-    * era's directories. The marker files are the only durable truth —
+    * version's directories. The marker files are the only durable truth —
     * a crash mid-compaction leaves the old marker newest, so this
     * serves the old, complete index. */
   def openIndex(spark: org.apache.spark.sql.SparkSession, tag: String,
       buckets: Int = 8): Unit = {
-    val era = IndexStore.readEra(spark, indexBase(tag)).getOrElse(
-      sys.error(s"index '$tag' has no committed era at ${indexBase(tag)}"))
-    registerTables(spark, tag, era, buckets)
+    registerTables(spark, tag, liveVersion(spark, tag), buckets)
     repairKnownIds(spark, tag)
-    // reclaim any era a crashed compaction staged but never committed
-    IndexStore.gcStagedEras(spark, indexBase(tag))
+    // reclaim any version a crashed compaction staged but never committed
+    VersionedStore.gcStaged(spark, indexBase(tag))
     ()
   }
 
   /** Build the stored index once per (tag, geometry): term-bucketed
     * postings stamped with generation 0, the 1-row stats table
     * (n_docs, sum_dl, gen), and an empty tombstone table — all staged
-    * under era 0 and committed with one marker create
-    * ([[IndexStore]]). The ONLY place the corpus is read — one forced
+    * as one version and committed with one marker create
+    * ([[VersionedStore.publish]]). The ONLY place the corpus is read — one forced
     * pass feeds both stored tables. */
   def buildIndex(spark: org.apache.spark.sql.SparkSession,
       docs: => DataFrame, idCol: String, textCol: String, tag: String,
       buckets: Int = 8): Unit =
     graft.sources.Bucketing.ensureOnce(s"bm25@$tag#$buckets") {
-      val base = indexBase(tag)
-      // writer lock for the stage+commit cycle — the same single-writer
-      // discipline every other public mutator of this store enforces
-      IndexStore.withWriterLock(spark, base) {
+      val built = VersionedStore.publish(spark, indexBase(tag)) { v =>
         val d = docs.cache()
         val post = postings(d, idCol, textCol).withColumn("gen", lit(0L))
-        IndexStore.stageBucketed(post, IndexStore.postDir(base, 0L),
-          "term", buckets)
+        IndexStore.stageBucketed(post, dir(tag, "post", v), "term", buckets)
         IndexStore.stagePlain(
           corpusStats(d, textCol).withColumn("gen", lit(0L)),
-          IndexStore.statsDir(base, 0L))
+          dir(tag, "stats", v))
         IndexStore.stagePlain(
           post.select(col(idCol), col("dl"), col("gen").as("upto_gen"))
             .limit(0),
-          IndexStore.tombDir(base, 0L))
+          dir(tag, "tomb", v))
         IndexStore.stagePlain(d.select(col(idCol)).distinct(),
-          IndexStore.idsDir(base, 0L))
+          dir(tag, "ids", v))
         d.unpersist()
-        IndexStore.commitEra(spark, base, 0L)
       }
-      registerTables(spark, tag, 0L, buckets)
+      registerTables(spark, tag, built, buckets)
     }
 
   /** The stored index through its tombstones — the merge-on-read view.
@@ -399,7 +398,7 @@ object Retrieval {
     // release (withWriterLock is not re-entrant and compactIndex takes
     // its own hold)
     val needCompact = doomed.limit(1).count() > 0 &&
-      IndexStore.withWriterLock(spark, indexBase(tag)) {
+      VersionedStore.withWriterLock(spark, indexBase(tag)) {
         doomed.write.mode("append").format("parquet")
           .saveAsTable(tombTable(tag))
         spark.catalog.refreshTable(tombTable(tag))
@@ -425,19 +424,19 @@ object Retrieval {
   /** Physically drop tombstoned postings and merge the
     * append-accumulated small files — ATOMICALLY. The live view
     * (postings minus tombstones, restated stats, an empty tombstone
-    * table) is staged in full under era N+1's fresh directories, then
-    * committed with [[IndexStore]]'s single marker create; only then do
-    * the catalog entries move and era N's directories get dropped. A
-    * crash anywhere before the marker leaves era N newest and complete
+    * table) is staged in full as version N+1's fresh directories, then
+    * committed with [[VersionedStore]]'s single marker create; only then
+    * do the catalog entries move and version N's directories get
+    * dropped. A crash anywhere before the marker leaves N newest and complete
     * — [[openIndex]] serves it untouched, which the crash-sim unit test
     * pins by killing exactly between stage and commit. Returns
     * (filesBefore, filesAfter) for the postings store. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, tag: String,
       idCol: String, buckets: Int = 8): (Int, Int) = {
     val before = parquetFileCount(spark, tag)
-    // create-exclusive base/__lock: two concurrent compactions would
-    // race the same staged era directory — the second fails fast
-    IndexStore.withWriterLock(spark, indexBase(tag)) {
+    // writer lock: two concurrent compactions would race the same
+    // staged version directory — the second fails fast
+    VersionedStore.withWriterLock(spark, indexBase(tag)) {
       val next = compactStage(spark, tag, idCol, buckets)
       compactCommit(spark, tag, next, buckets)
     }
@@ -447,26 +446,20 @@ object Retrieval {
   private def parquetFileCount(spark: org.apache.spark.sql.SparkSession,
       tag: String): Int = {
     import org.apache.hadoop.fs.Path
-    val base = indexBase(tag)
-    val era = IndexStore.readEra(spark, base).getOrElse(
-      sys.error(s"index '$tag' has no committed era"))
-    val loc = new Path(IndexStore.postDir(base, era))
+    val loc = new Path(dir(tag, "post", liveVersion(spark, tag)))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(loc)
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
   }
 
-  /** The STAGE half of compaction: materialize era N+1's postings,
+  /** The STAGE half of compaction: materialize version N+1's postings,
     * stats, and empty tombstone table without committing. Package-
     * private so the crash-sim test can stop exactly here and prove the
-    * old era still serves. Returns the staged era number. */
+    * old version still serves. Returns the staged version number. */
   private[graft] def compactStage(spark: org.apache.spark.sql.SparkSession,
       tag: String, idCol: String, buckets: Int): Long = {
     import spark.implicits._
-    val base = indexBase(tag)
-    val era = IndexStore.readEra(spark, base).getOrElse(
-      sys.error(s"index '$tag' has no committed era"))
-    val next = era + 1
+    val next = liveVersion(spark, tag) + 1
     val (livePost, liveStats) = liveIndex(spark, tag, idCol)
     // repartition ON the bucket column into exactly `buckets` tasks:
     // Spark's shuffle hash and its bucket hash are the same murmur3
@@ -479,41 +472,37 @@ object Retrieval {
       .collect().head.getLong(0)
     val Array(nDocs, sumDl) = liveStats.collect().head
       .toSeq.map(_.asInstanceOf[Long]).toArray
-    IndexStore.stageBucketed(postSnap, IndexStore.postDir(base, next),
-      "term", buckets)
+    IndexStore.stageBucketed(postSnap, dir(tag, "post", next), "term",
+      buckets)
     IndexStore.stagePlain(
       Seq((nDocs, sumDl, gen)).toDF("n_docs", "sum_dl", "gen"),
-      IndexStore.statsDir(base, next))
+      dir(tag, "stats", next))
     IndexStore.stagePlain(spark.table(tombTable(tag)).limit(0),
-      IndexStore.tombDir(base, next))
+      dir(tag, "tomb", next))
     IndexStore.stagePlain(postSnap.select(col(idCol)).distinct(),
-      IndexStore.idsDir(base, next))
+      dir(tag, "ids", next))
     next
   }
 
   /** The COMMIT half: one marker create, then re-point the catalog and
-    * drop the previous era's directories. */
+    * drop the previous version's directories. */
   private[graft] def compactCommit(spark: org.apache.spark.sql.SparkSession,
-      tag: String, era: Long, buckets: Int): Unit = {
-    val base = indexBase(tag)
-    IndexStore.commitEra(spark, base, era)
-    registerTables(spark, tag, era, buckets)
-    IndexStore.dropOldEras(spark, base, keep = era)
+      tag: String, v: Long, buckets: Int): Unit = {
+    VersionedStore.commitVersion(spark, indexBase(tag), v)
+    registerTables(spark, tag, v, buckets)
+    VersionedStore.retainFrom(spark, indexBase(tag), v)
   }
 
   /** Overwrite the 1-row stats table in place (its directory within the
-    * CURRENT era — era swaps happen only at compaction). The overwrite
-    * is non-atomic but 1-row and covered by the [[repairStats]]
-    * contract. */
+    * LIVE version — new versions are committed only at compaction). The
+    * overwrite is non-atomic but 1-row and covered by the
+    * [[repairStats]] contract. */
   private def writeStats(spark: org.apache.spark.sql.SparkSession,
       tag: String, nDocs: Long, sumDl: Long, gen: Long): Unit = {
     import spark.implicits._
-    val base = indexBase(tag)
-    val era = IndexStore.readEra(spark, base).getOrElse(
-      sys.error(s"index '$tag' has no committed era"))
     IndexStore.stagePlain(
       Seq((nDocs, sumDl, gen)).toDF("n_docs", "sum_dl", "gen"),
-      IndexStore.statsDir(base, era))
+      dir(tag, "stats", liveVersion(spark, tag)))
     spark.catalog.refreshTable(statsTable(tag))
   }
 
@@ -585,9 +574,9 @@ object Retrieval {
       s"index '$tag' must be initialized by buildIndex first")
     // writer lock across the gen derivation + all three writes: a
     // racing second appender would derive the same generation from the
-    // same stored counter, and an append racing a compaction's era
-    // swap would write postings into the era being retired
-    IndexStore.withWriterLock(spark, indexBase(tag)) {
+    // same stored counter, and an append racing a compaction's commit
+    // would write postings into the version being retired
+    VersionedStore.withWriterLock(spark, indexBase(tag)) {
     val b = batch.cache()
     val add = corpusStats(b, textCol).collect().head
     val cur = spark.table(statsTable(tag)).collect().head
@@ -875,9 +864,8 @@ object Retrieval {
       .distinct().localCheckpoint()
     val drifted = truth.count() > surviving.distinct().count()
     if (drifted) {
-      val base = indexBase(tag)
-      val era = IndexStore.readEra(spark, base).get
-      IndexStore.stageIds(truth, IndexStore.idsDir(base, era), idCol)
+      IndexStore.stageIds(truth, dir(tag, "ids", liveVersion(spark, tag)),
+        idCol)
       spark.catalog.refreshTable(idsTable(tag))
     }
     drifted

@@ -1,10 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Expression, HigherOrderFunction, Levenshtein, ScalaUDF}
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter, SparkPlan, SortExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Pre-flight plan lint — the scale-killer checks the test suite runs
@@ -30,7 +31,13 @@ import org.apache.spark.sql.execution.window.WindowExec
   *    pushes DETERMINISTIC filters below exchanges on its own, so a
   *    firing here is the residue the optimizer cannot move (e.g. a
   *    non-deterministic sampling predicate after a repartition) —
-  *    reorder it by hand.
+  *    reorder it by hand;
+  *  - expensive-join-condition: `array_intersect`, a Levenshtein
+  *    scorer, a Scala UDF or a higher-order function inside a join's
+  *    condition runs once per compared pair (and again per reference
+  *    the optimizer substituted) — usually a filter on a scorer that
+  *    Catalyst pushed into the join; compute the scorer once behind
+  *    [[graft.operators.EvalOnce]] and filter after it.
   *
   * A finding is advice, not an error: the registry itself whitelists
   * deliberate bounded products (see PlanAuditSpec) — the point is that
@@ -78,11 +85,26 @@ object PlanLint {
       }
       case _ => Nil
     }
+    val costly = p match {
+      case j: BaseJoinExec => j.condition.toSeq.flatMap(expensive).distinct
+        .map(what => Finding("expensive-join-condition", p.nodeName,
+          s"$what evaluated per compared pair inside the join condition"))
+      case _ => Nil
+    }
     val nested = p match {
       case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
       case _ => Nil
     }
-    here ++ nested ++ p.children.flatMap(walk) ++ p.subqueries.flatMap(walk)
+    here ++ costly ++ nested ++ p.children.flatMap(walk) ++
+      p.subqueries.flatMap(walk)
+  }
+
+  /** The per-row-costly expressions of `e`, by name. */
+  private def expensive(e: Expression): Seq[String] = e.collect {
+    case _: ArrayIntersect => "array_intersect"
+    case _: Levenshtein | _: LevenshteinSimilarity => "levenshtein"
+    case u: ScalaUDF => s"udf ${u.udfName.getOrElse("(anonymous)")}"
+    case h: HigherOrderFunction => h.prettyName
   }
 
   /** Skip the structural wrappers between a Filter and what feeds it

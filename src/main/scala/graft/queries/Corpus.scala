@@ -1303,8 +1303,8 @@ object Corpus {
   /** The phrase-index maintenance cycle as one oracle-exact query —
     * the txt_bm25_upsert shape on the window-postings store: build,
     * RETRACT doc_id%10==3, RE-INDEX doc_id%10==7 with changed text,
-    * COMPACT (atomic era swap), retract doc_id%10==9 post-compaction,
-    * serve. Must equal a from-scratch extraction over the mutated
+    * COMPACT (atomic version commit), retract doc_id%10==9
+    * post-compaction, serve. Must equal a from-scratch extraction over the mutated
     * corpus — which is exactly what the oracle computes. */
   val txtPhraseUpsert = Q(
     "txt_phrase_upsert",

@@ -1706,7 +1706,8 @@ object Pipeline {
 
   /** Stored-ANN maintenance cycle: build WITHOUT the %10==3 vectors,
     * APPEND them against the frozen stored centroids, DELETE %100==23,
-    * COMPACT (atomic era swap), delete %100==47 post-compaction, serve.
+    * COMPACT (atomic version commit), delete %100==47 post-compaction,
+    * serve.
     * Geometry note that makes this oracle-able: the build set contains
     * every centroid id (%16==0 ids are even; the excluded/deleted ids
     * end in odd digits), so frozen-centroid assignment equals

@@ -255,11 +255,22 @@ object Catalog {
 
 /** Parquet-backed table store over the catalog: the reference's Postgres
   * CRUD surface (database.py) re-expressed as read → relational merge →
-  * overwrite. One writer per table (SURVEY §7.4.2 — the reference
+  * commit. One writer per table (SURVEY §7.4.2 — the reference
   * serializes via row locks + max_instances=1; we keep the same
   * discipline at the job level).
   *
-  * Scale: merges shuffle once on the business key; `overwrite` rewrites
+  * Storage: each table is a [[VersionedStore]] under `root/<name>`.
+  * overwrite, upsert, insertIfAbsent and compact stage the next full
+  * snapshot `v_N` and publish it with one marker create under the
+  * table's writer lease ([[VersionedStore.publish]]), then keep the
+  * version before it and drop the older ones: a reader that resolved
+  * the previous version while the writer committed still finds its
+  * files. A crash before the marker leaves the previous version
+  * serving, and the retry re-stages N over the orphan. `read` resolves
+  * the latest marker with one listing. [[append]] and
+  * [[overwritePartitions]] write in place (see each).
+  *
+  * Scale: merges shuffle once on the business key; a commit rewrites
   * the table (partition-level overwrite is the M8 path for derived
   * tables). All paths go through the Hadoop FS API, so `root` may be any
   * supported filesystem, not just local disk. */
@@ -272,71 +283,73 @@ final class TableStore(spark: SparkSession, root: String) {
 
   def path(name: String): String = s"$root/${defOf(name).name}"
 
-  private def fs = new org.apache.hadoop.fs.Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
+  /** True once the table has a committed version. */
   def exists(name: String): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(path(name)))
+    VersionedStore.latest(spark, path(name)).isDefined
 
-  /** CREATE TABLE IF NOT EXISTS — write an empty parquet with the catalog
-    * schema so downstream reads/merges see the right columns. */
-  def createIfNotExists(name: String): Unit =
-    if (!exists(name)) overwrite(name,
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        defOf(name).schema))
+  /** CREATE TABLE IF NOT EXISTS — commit an empty snapshot with the
+    * catalog schema so downstream reads/merges see the right columns. */
+  def createIfNotExists(name: String): Unit = { live(name); () }
 
-  def read(name: String): DataFrame = {
-    createIfNotExists(name)
-    read0(name)
-  }
+  /** The latest committed version, committing an empty one first when
+    * the table has none. */
+  private def live(name: String): Long =
+    VersionedStore.latest(spark, path(name)).getOrElse(commit(name)(identity))
 
-  private def read0(name: String): DataFrame =
-    spark.read.schema(defOf(name).schema).parquet(path(name))
+  def read(name: String): DataFrame = readAt(name, live(name))
 
-  /** Single-writer enforcement: every mutator holds the table's lock
-    * LEASE for the duration of the write. The reference serializes
-    * through Postgres row locks + max_instances=1 (SURVEY §7.4.2);
-    * here a create-exclusive lock file with heartbeat + TTL steal
-    * ([[graft.operators.LeaseLock]]) fails fast when a LIVE second
-    * writer races, and recovers unattended when a crashed writer left
-    * its lock behind. */
-  private def withLock[T](name: String)(f: => T): T =
-    graft.operators.LeaseLock.withLease(fs,
-      new org.apache.hadoop.fs.Path(s"$root/${defOf(name).name}__lock"),
-      s"table $name")(f)
+  private def readAt(name: String, v: Long): DataFrame =
+    spark.read.schema(defOf(name).schema)
+      .parquet(VersionedStore.verDir(path(name), v))
 
-  /** Schema-checked overwrite (column names+types must match the catalog;
-    * nullability is advisory in parquet). Writes to a temp dir then swaps,
-    * so a failed write never truncates the table. */
-  def overwrite(name: String, df: DataFrame): Unit =
-    withLock(name)(overwriteUnlocked(name, df))
-
-  private def overwriteUnlocked(name: String, df: DataFrame): Unit = {
-    val d = defOf(name)
+  /** Project onto the catalog columns and check their types (nullability
+    * is advisory in parquet) — BEFORE any write, so a mistyped frame
+    * never poisons the table for the next pinned read. */
+  private def checked(d: Catalog.TableDef, df: DataFrame,
+      verb: String): DataFrame = {
     val got = df.select(d.schema.fieldNames.map(col).toIndexedSeq: _*)
     require(got.schema.fields.map(x => (x.name, x.dataType)).sameElements(
       d.schema.fields.map(x => (x.name, x.dataType))),
-      s"schema mismatch writing $name: ${got.schema.simpleString} vs ${d.schema.simpleString}")
-    val tmp = new org.apache.hadoop.fs.Path(path(name) + "__tmp")
-    val dst = new org.apache.hadoop.fs.Path(path(name))
-    got.write.mode("overwrite").parquet(tmp.toString)
-    // fence: a usurped writer must abort BEFORE the destructive swap
-    // (the delete+rename pair is this store's publish point)
-    graft.operators.LeaseLock.fenceCheck()
-    if (fs.exists(dst)) fs.delete(dst, true)
-    fs.rename(tmp, dst)
+      s"schema mismatch $verb ${d.name}: ${got.schema.simpleString} vs ${d.schema.simpleString}")
+    got
   }
 
+  /** Commit `next(previous)` as the table's next version — the previous
+    * snapshot is read under the same lease hold (the empty table before
+    * the first commit) — then drop every version before the previous
+    * one. Returns the committed version. */
+  private def commit(name: String)(next: DataFrame => DataFrame): Long = {
+    val d = defOf(name)
+    val base = path(name)
+    val v = VersionedStore.publish(spark, base) { v =>
+      val prev = if (v == 0) spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], d.schema)
+        else readAt(name, v - 1)
+      VersionedStore.writeSnapshot(spark, VersionedStore.verDir(base, v),
+        checked(d, next(prev), "writing"))
+    }
+    VersionedStore.retainFrom(spark, base, v - 1)
+    v
+  }
+
+  /** Schema-checked overwrite, committed as the next version. */
+  def overwrite(name: String, df: DataFrame): Unit = {
+    commit(name)(_ => df); ()
+  }
+
+  /** Append in place into the live version (no rewrite, no new
+    * version), under the table's writer lease. Like any parquet append,
+    * a crash mid-write can leave part of the batch behind; the
+    * ingestion paths anti-join against the stored keys, so the
+    * redelivery appends only the rest. */
   def append(name: String, df: DataFrame): Unit = {
+    val got = checked(defOf(name), df, "appending")
     createIfNotExists(name)
-    val d = defOf(name)
-    val got = df.select(d.schema.fieldNames.map(col).toIndexedSeq: _*)
-    // same type gate as overwrite: a mistyped frame must be rejected
-    // BEFORE the write, not poison the table for the next pinned read
-    require(got.schema.fields.map(x => (x.name, x.dataType)).sameElements(
-      d.schema.fields.map(x => (x.name, x.dataType))),
-      s"schema mismatch appending $name: ${got.schema.simpleString} vs ${d.schema.simpleString}")
-    withLock(name)(got.write.mode("append").parquet(path(name)))
+    val base = path(name)
+    VersionedStore.withWriterLock(spark, base) {
+      got.write.mode("append").parquet(
+        VersionedStore.verDir(base, VersionedStore.latest(spark, base).get))
+    }
   }
 
   /** MERGE on the table's registered business key (M1-M6): updates win on
@@ -344,16 +357,14 @@ final class TableStore(spark: SparkSession, root: String) {
   def upsert(name: String, updates: DataFrame): Unit = {
     val d = defOf(name)
     require(d.businessKey.nonEmpty, s"$name has no business key; use append/overwrite")
-    createIfNotExists(name)
-    withLock(name)(overwriteUnlocked(name, Merge.upsert(read0(name), updates, d.businessKey)))
+    commit(name)(Merge.upsert(_, updates, d.businessKey))
   }
 
   /** M5/M10 check-then-insert on the business key. */
   def insertIfAbsent(name: String, incoming: DataFrame): Unit = {
     val d = defOf(name)
     require(d.businessKey.nonEmpty, s"$name has no business key; use append/overwrite")
-    createIfNotExists(name)
-    withLock(name)(overwriteUnlocked(name, Merge.insertIfAbsent(read0(name), incoming, d.businessKey)))
+    commit(name)(Merge.insertIfAbsent(_, incoming, d.businessKey))
   }
 
   /** Partition-aware overwrite (M8 at warehouse scale): writes `df` with
@@ -363,14 +374,15 @@ final class TableStore(spark: SparkSession, root: String) {
     * touching the other 99.9% of a 100 TB table. First write of a table
     * establishes the layout; later calls must use the same columns.
     *
-    * ATOMICITY is per-partition, weaker than overwrite(): dynamic
-    * overwrite replaces each partition directory in place (the file
-    * committer stages to _temporary inside the table, then moves per
-    * partition), so a mid-write failure can leave SOME partitions
-    * replaced and others old — re-running the same write heals it,
+    * Partitioned tables live outside the versioned layout: read them with
+    * [[readPartitioned]], not [[read]]. ATOMICITY is per-partition,
+    * weaker than overwrite()'s versioned commit: dynamic overwrite
+    * replaces each partition directory in place (the file committer
+    * stages to _temporary inside the table, then moves per partition),
+    * so a mid-write failure can leave SOME partitions replaced and
+    * others old — re-running the same write heals it,
     * which is why callers (IncrementalIngest, month re-harvest) keep
-    * their inputs re-derivable. overwrite() keeps its tmp-dir swap for
-    * the all-or-nothing case. The dynamic mode is a per-WRITE
+    * their inputs re-derivable. The dynamic mode is a per-WRITE
     * DataFrameWriter option here — session conf is never touched, so
     * concurrent queries in the same session see no conf flicker. */
   def overwritePartitions(name: String, df: DataFrame,
@@ -380,10 +392,12 @@ final class TableStore(spark: SparkSession, root: String) {
       s"partition columns must exist in the frame: $partitionCols")
     val got = df.select((d.schema.fieldNames.filterNot(partitionCols.contains)
       ++ partitionCols).map(col).toIndexedSeq: _*)
-    withLock(name)(got.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(path(name)))
+    VersionedStore.withWriterLock(spark, path(name)) {
+      got.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionCols: _*)
+        .parquet(path(name))
+    }
   }
 
   /** Read a partitioned table (no schema pin — partition columns move to
@@ -393,24 +407,19 @@ final class TableStore(spark: SparkSession, root: String) {
     spark.read.parquet(path(name))
   }
 
-  /** Small-file compaction: rewrite the table with files sized near
-    * `targetFileBytes`. Streaming foreachBatch merges and frequent small
-    * upserts accrete tiny files; at warehouse scale scan cost is driven
-    * by file count (task scheduling + footer reads), so periodic
-    * compaction is part of table maintenance. Returns (filesBefore,
-    * filesAfter). Partitioned tables need per-partition compaction —
-    * run this only on unpartitioned catalog tables. */
+  /** Small-file compaction: commit the table's next version with files
+    * sized near `targetFileBytes`. Streaming foreachBatch merges and
+    * frequent small appends accrete tiny files; at warehouse scale scan
+    * cost is driven by file count (task scheduling + footer reads), so
+    * periodic compaction is part of table maintenance. Returns
+    * (filesBefore, filesAfter). Partitioned tables need per-partition
+    * compaction — run this only on unpartitioned catalog tables. */
   def compact(name: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(path(name))
-    val before = fs.listStatus(p)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val totalBytes = before.map(_.getLen).sum
+    val base = path(name)
+    val (before, totalBytes) = VersionedStore.fileStats(spark, base, live(name))
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val df = read(name)
-    withLock(name)(overwriteUnlocked(name, df.repartition(nFiles)))
-    val after = fs.listStatus(p)
-      .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    (before.length, after)
+    val v = commit(name)(_.repartition(nFiles))
+    (before, VersionedStore.fileStats(spark, base, v)._1)
   }
 
   /** Business-key uniqueness audit — the check the reference gets from

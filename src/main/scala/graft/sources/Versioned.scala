@@ -3,37 +3,45 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Versioned table snapshots with time-travel reads — the "read the
-  * EXACT corpus this model trained on" primitive a training-data
-  * pipeline needs for reproducibility (and the reference approximates by
+/** Versioned snapshots with time-travel reads, and the one publish path
+  * every stored structure in this engine goes through: catalog tables
+  * ([[TableStore]]), served indexes (BM25, phrase and ANN postings with
+  * their stats, tombstones and id lists), maintained views, the result
+  * cache's index and the Companies House harvest. It is also the "read
+  * the EXACT corpus this model trained on" primitive a training-data
+  * pipeline needs for reproducibility (the reference approximates it by
   * re-exporting dated CSV copies of its tables, e.g. its timestamped
   * export paths in file_processors.py).
   *
-  * The storage discipline is [[graft.operators.IndexStore]]'s era
-  * pattern generalized to whole tables: every commit stages a complete
-  * snapshot directory `base/v_N`, then creates ONE marker file
-  * `base/ver/c_N` — the atomic commit point. A crash mid-stage leaves no
-  * marker, so readers never see a partial snapshot; the previous version
-  * remains latest. Marker files — not directory listings of data — are
-  * the only source of truth, so an orphaned staged directory is garbage,
-  * never a servable version.
+  * A commit stages every file of version N — a single snapshot under
+  * `base/v_N`, or one directory per member table under
+  * `base/<name>_v_N` — then creates ONE marker file `base/ver/c_N`, the
+  * atomic commit point ([[publish]]). A crash mid-stage leaves no
+  * marker, so readers never see a partial snapshot; the previous
+  * version remains latest, and the retry re-derives N from the markers
+  * and overwrites the orphan. Marker files — not directory listings of
+  * data — are the only source of truth, so an orphaned staged directory
+  * is garbage ([[gcStaged]]), never a servable version.
   *
-  * Scale notes: a commit is one full write of the frame (no read-modify
-  * cycle), `read` of any version is an ordinary parquet scan with full
+  * Scale notes: a commit is one full write of each staged frame, `read`
+  * of any version is an ordinary parquet scan with full
   * pushdown/pruning, and nothing here ever lists data files at plan
-  * time — only the tiny marker directory. Retention is explicit and
-  * crash-ordered ([[retainFrom]] deletes markers before directories, so
-  * an interrupted cleanup can only leave unreferenced bytes, never a
-  * marker pointing at deleted data). Single writer per `base` is
-  * ENFORCED, not just assumed: [[commit]]/[[commitAll]] hold the
-  * create-exclusive `base/__lock` ([[graft.operators.IndexStore
-  * .withWriterLock]]) for the stage+commit cycle, so a racing second
-  * committer fails fast instead of staging into the same version
-  * directory.
+  * time — only the tiny marker directory, once per latest-version read.
+  * Retention is explicit and crash-ordered ([[retainFrom]] deletes
+  * markers before directories, so an interrupted cleanup can only leave
+  * unreferenced bytes, never a marker pointing at deleted data). Single
+  * writer per `base` is ENFORCED, not just assumed: every commit holds
+  * the `base/__lock` lease ([[withWriterLock]]) for the stage+commit
+  * cycle, so a racing second committer fails fast instead of staging
+  * into the same version directory.
   */
 object VersionedStore {
 
   def verDir(base: String, v: Long): String = s"$base/v_$v"
+
+  /** Member table `name` of version `v` in the multi-table layout. */
+  def tableDir(base: String, name: String, v: Long): String =
+    s"$base/${name}_v_$v"
 
   private def markerDir(base: String) = new Path(s"$base/ver")
 
@@ -54,8 +62,47 @@ object VersionedStore {
   def latest(spark: SparkSession, base: String): Option[Long] =
     versions(spark, base).lastOption
 
-  /** Commit `df` as the next version: stage the full snapshot, then the
-    * one-file-create commit point. Returns the new version number.
+  private def latestOrFail(spark: SparkSession, base: String): Long =
+    latest(spark, base).getOrElse(sys.error(s"no committed versions at $base"))
+
+  private def nextVersion(spark: SparkSession, base: String): Long =
+    latest(spark, base).map(_ + 1L).getOrElse(0L)
+
+  /** Single-writer enforcement for a store base directory: a LEASE on
+    * `base/__lock` ([[graft.operators.LeaseLock]]) held for a
+    * stage+commit cycle, so two concurrent writers fail fast instead of
+    * racing the same staged version directory. The reference serializes
+    * the equivalent through Postgres row locks + scheduler
+    * max_instances=1 (SURVEY §7.4.2). A writer killed INSIDE the
+    * critical section does not wedge the store: its lease stops
+    * heartbeating and the next writer steals it after the TTL. The
+    * staged data needs no repair: an interrupted holder never created
+    * its marker. Not re-entrant. */
+  def withWriterLock[T](spark: SparkSession, base: String,
+      ttlMs: Long = graft.operators.LeaseLock.DefaultTtlMs)(body: => T): T = {
+    val f = fs(spark, base)
+    f.mkdirs(new Path(base))
+    graft.operators.LeaseLock.withLease(f, new Path(s"$base/__lock"),
+      s"store $base", ttlMs)(body)
+  }
+
+  /** THE publish path: under the writer lock, take the next version,
+    * let `stage` write every file of it, then create its marker. Returns
+    * the committed version. */
+  def publish(spark: SparkSession, base: String)(stage: Long => Unit): Long =
+    withWriterLock(spark, base)(publishLocked(spark, base)(stage))
+
+  /** [[publish]] for a caller that already holds [[withWriterLock]] on
+    * `base` (the lock is not re-entrant). */
+  private[graft] def publishLocked(spark: SparkSession, base: String)(
+      stage: Long => Unit): Long = {
+    val v = nextVersion(spark, base)
+    stage(v)
+    commitVersion(spark, base, v)
+    v
+  }
+
+  /** Commit `df` as the next version. Returns the new version number.
     * `extras` are small marker files written INSIDE the staged snapshot
     * directory (underscore-prefixed names are invisible to parquet
     * readers), so payload + metadata install atomically with the one
@@ -63,14 +110,7 @@ object VersionedStore {
     * maintained view ([[graft.operators.MatView]]'s idempotence). */
   def commit(spark: SparkSession, base: String, df: DataFrame,
       extras: Map[String, String] = Map.empty): Long =
-    // create-exclusive base/__lock for the stage+commit cycle: two
-    // concurrent committers would both derive latest+1 and race the
-    // same staged version directory — the second fails fast instead
-    graft.operators.IndexStore.withWriterLock(spark, base) {
-      val v = stageVersion(spark, base, df, extras)
-      commitVersion(spark, base, v)
-      v
-    }
+    publish(spark, base)(v => writeSnapshot(spark, verDir(base, v), df, extras))
 
   /** The STAGE half of [[commit]] alone — everything written, nothing
     * committed. Package-private so crash-sim tests can stop exactly
@@ -79,15 +119,21 @@ object VersionedStore {
     * from the markers, which never advanced). */
   private[graft] def stageVersion(spark: SparkSession, base: String,
       df: DataFrame, extras: Map[String, String] = Map.empty): Long = {
-    val v = latest(spark, base).map(_ + 1L).getOrElse(0L)
-    df.write.mode("overwrite").parquet(verDir(base, v))
-    val f = fs(spark, base)
+    val v = nextVersion(spark, base)
+    writeSnapshot(spark, verDir(base, v), df, extras)
+    v
+  }
+
+  /** Write `df` to `dir`, then each extra as a small file inside it. */
+  private[graft] def writeSnapshot(spark: SparkSession, dir: String,
+      df: DataFrame, extras: Map[String, String] = Map.empty): Unit = {
+    df.write.mode("overwrite").parquet(dir)
+    val f = fs(spark, dir)
     extras.foreach { case (name, content) =>
-      val out = f.create(new Path(s"${verDir(base, v)}/$name"), true)
+      val out = f.create(new Path(s"$dir/$name"), true)
       out.write(content.getBytes("UTF-8"))
       out.close()
     }
-    v
   }
 
   /** The COMMIT half: one marker-file create. Fence-checked: a writer
@@ -131,11 +177,9 @@ object VersionedStore {
     spark.read.parquet(verDir(base, v))
   }
 
-  def readLatest(spark: SparkSession, base: String): DataFrame = {
-    val v = latest(spark, base).getOrElse(
-      sys.error(s"no committed versions at $base"))
-    read(spark, base, v)
-  }
+  /** The latest committed version — one marker listing. */
+  def readLatest(spark: SparkSession, base: String): DataFrame =
+    spark.read.parquet(verDir(base, latestOrFail(spark, base)))
 
   // ---- multi-table atomic commits -----------------------------------
   //
@@ -149,9 +193,6 @@ object VersionedStore {
   // every commit) — right for base+view pairs, wrong for tables that
   // evolve independently.
 
-  private def tableDir(base: String, name: String, v: Long): String =
-    s"$base/${name}_v_$v"
-
   /** Stage every table of version v, then one marker create. `extras`
     * land inside the FIRST table's directory (atomic with the marker
     * like the single-table form). Returns the committed version. */
@@ -159,19 +200,11 @@ object VersionedStore {
       tables: Seq[(String, DataFrame)],
       extras: Map[String, String] = Map.empty): Long = {
     require(tables.nonEmpty, "commitAll of nothing")
-    graft.operators.IndexStore.withWriterLock(spark, base) {
-      val v = latest(spark, base).map(_ + 1L).getOrElse(0L)
-      tables.foreach { case (n, df) =>
-        df.write.mode("overwrite").parquet(tableDir(base, n, v)) }
-      val f = fs(spark, base)
-      extras.foreach { case (name, content) =>
-        val out = f.create(
-          new Path(s"${tableDir(base, tables.head._1, v)}/$name"), true)
-        out.write(content.getBytes("UTF-8"))
-        out.close()
+    publish(spark, base) { v =>
+      tables.zipWithIndex.foreach { case ((n, df), i) =>
+        writeSnapshot(spark, tableDir(base, n, v), df,
+          if (i == 0) extras else Map.empty)
       }
-      commitVersion(spark, base, v)
-      v
     }
   }
 
@@ -183,12 +216,10 @@ object VersionedStore {
     spark.read.parquet(tableDir(base, name, v))
   }
 
+  /** One member table of the latest version — one marker listing. */
   def readLatestTable(spark: SparkSession, base: String,
-      name: String): DataFrame = {
-    val v = latest(spark, base).getOrElse(
-      sys.error(s"no committed versions at $base"))
-    readTable(spark, base, name, v)
-  }
+      name: String): DataFrame =
+    spark.read.parquet(tableDir(base, name, latestOrFail(spark, base)))
 
   /** Every version-suffixed directory under `base` with its parsed
     * version — matches both the single-table `v_N` layout and the
@@ -258,8 +289,8 @@ object VersionedStore {
     * to every prior version keeps working, concurrent readers of the old
     * snapshot are never disturbed, and a crash mid-rewrite leaves the
     * old version latest (same stage-then-marker discipline as
-    * [[commit]]). This is the versioned complement of the in-place
-    * [[TableStore.compact]]: streaming foreachBatch maintenance accretes
+    * [[commit]]). [[TableStore.compact]] is the catalog tables' form of
+    * the same rewrite: streaming foreachBatch maintenance accretes
     * one small file per batch, and at warehouse scale scan cost is
     * driven by file COUNT (task scheduling + footer reads), so periodic
     * compaction is table maintenance, not an optimization.
@@ -282,9 +313,8 @@ object VersionedStore {
       targetBytes: Long = 128L << 20,
       clusterBy: Seq[String] = Nil): Option[Long] = {
     require(targetBytes > 0, "targetBytes must be positive")
-    graft.operators.IndexStore.withWriterLock(spark, base) {
-      val v = latest(spark, base).getOrElse(
-        sys.error(s"no committed versions at $base"))
+    withWriterLock(spark, base) {
+      val v = latestOrFail(spark, base)
       val (nFiles, totalBytes) = fileStats(spark, base, v)
       val target = math.max(1L,
         math.ceil(totalBytes.toDouble / targetBytes).toLong).toInt
@@ -299,33 +329,31 @@ object VersionedStore {
               clusterBy.map(org.apache.spark.sql.functions.col): _*)
         val carried = carriedExtras(spark, base, v) +
           ("_optimized_from" -> v.toString)
-        // stage/commit halves directly: withWriterLock is not
-        // re-entrant, and the whole stats-read + rewrite must sit
-        // under ONE lock hold
-        val nv = stageVersion(spark, base, compacted, carried)
-        // skipping metadata follows the table through maintenance:
-        // per-file stats are true of a LAYOUT, so the rewrite re-derives
-        // them for the new files (geometry read from the stored tables —
-        // an OPTIMIZE must never silently downgrade a skipping table to
-        // full scans)
-        val f2 = fs(spark, base)
-        if (f2.exists(new Path(zoneMapDir(base, v)))) {
-          val statsCols = spark.read.parquet(zoneMapDir(base, v)).columns
-            .collect { case c if c.startsWith("min_") => c.drop(4) }.toSeq
-          stageZoneMap(spark, base, nv, statsCols)
-        }
-        if (f2.exists(new Path(bloomDir(base, v)))) {
-          val bt = spark.read.parquet(bloomDir(base, v))
-          val geo = bt.select(
-            org.apache.spark.sql.functions.size(
-              org.apache.spark.sql.functions.col("words")) * 64,
-            org.apache.spark.sql.functions.col("k")).head()
-          val cols = bt.select("col_name").distinct()
-            .collect().map(_.getString(0)).toSeq.sorted
-          stageBloom(spark, base, nv, cols, geo.getInt(0), geo.getInt(1))
-        }
-        commitVersion(spark, base, nv)
-        Some(nv)
+        // the whole stats-read + rewrite sits under ONE lock hold
+        Some(publishLocked(spark, base) { nv =>
+          writeSnapshot(spark, verDir(base, nv), compacted, carried)
+          // skipping metadata follows the table through maintenance:
+          // per-file stats are true of a LAYOUT, so the rewrite
+          // re-derives them for the new files (geometry read from the
+          // stored tables — an OPTIMIZE must never silently downgrade a
+          // skipping table to full scans)
+          val f2 = fs(spark, base)
+          if (f2.exists(new Path(zoneMapDir(base, v)))) {
+            val statsCols = spark.read.parquet(zoneMapDir(base, v)).columns
+              .collect { case c if c.startsWith("min_") => c.drop(4) }.toSeq
+            stageZoneMap(spark, base, nv, statsCols)
+          }
+          if (f2.exists(new Path(bloomDir(base, v)))) {
+            val bt = spark.read.parquet(bloomDir(base, v))
+            val geo = bt.select(
+              org.apache.spark.sql.functions.size(
+                org.apache.spark.sql.functions.col("words")) * 64,
+              org.apache.spark.sql.functions.col("k")).head()
+            val cols = bt.select("col_name").distinct()
+              .collect().map(_.getString(0)).toSeq.sorted
+            stageBloom(spark, base, nv, cols, geo.getInt(0), geo.getInt(1))
+          }
+        })
       }
     }
   }
@@ -373,13 +401,11 @@ object VersionedStore {
       bloomBits: Int = 1 << 16, bloomK: Int = 3): Long = {
     require(statsCols.nonEmpty || bloomCols.nonEmpty,
       "commitWithStats needs stats or bloom columns")
-    graft.operators.IndexStore.withWriterLock(spark, base) {
-      val v = stageVersion(spark, base, df, extras)
+    publish(spark, base) { v =>
+      writeSnapshot(spark, verDir(base, v), df, extras)
       if (statsCols.nonEmpty) stageZoneMap(spark, base, v, statsCols)
       if (bloomCols.nonEmpty)
         stageBloom(spark, base, v, bloomCols, bloomBits, bloomK)
-      commitVersion(spark, base, v)
-      v
     }
   }
 

@@ -87,4 +87,24 @@ class CacheAndFuzzySpec extends AnyFunSuite {
     assert(cache.get("k2").isEmpty)
     assert(cache.get("k3").isDefined)
   }
+
+  test("CacheStore crash between index stage and marker: the prior index still serves get") {
+    val clock = 1000L
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_crash").toString
+    val cache = new CacheStore(spark, dir, ttlMs = 500L, maxEntries = 2,
+      now = () => clock)
+    cache.put("k1", Seq((1, "a")).toDF("id", "v"))
+    // CRASH SIM: a put staged its next index (k1 evicted in favour of
+    // k2) and died before the marker
+    graft.sources.VersionedStore.stageVersion(spark, s"$dir/_index",
+      Seq(("k2", clock, clock + 500L)).toDF("cache_key", "created_ms", "expiry_ms"))
+    assert(cache.get("k1").map(_.count()).contains(1L),
+      "the committed index must keep serving")
+    assert(cache.get("k2").isEmpty, "an uncommitted index entry must not serve")
+    assert(cache.size() == 1)
+    // the next put commits over the orphan
+    cache.put("k3", Seq((3, "c")).toDF("id", "v"))
+    assert(cache.get("k1").isDefined && cache.get("k3").isDefined)
+    assert(cache.size() == 2)
+  }
 }

@@ -213,7 +213,7 @@ class CatalogSpec extends AnyFunSuite {
     store.overwrite(td.name, mk(td, Map("id" -> 1L, "company_number" -> "X1")))
     // simulate a concurrent writer holding the lock
     val lockPath = new java.io.File(new java.net.URI(
-      "file://" + store.path(td.name) + "__lock").getPath)
+      "file://" + store.path(td.name) + "/__lock").getPath)
     assert(lockPath.createNewFile())
     intercept[IllegalStateException] {
       store.upsert(td.name, mk(td, Map("id" -> 2L, "company_number" -> "X2")))
@@ -222,6 +222,57 @@ class CatalogSpec extends AnyFunSuite {
     store.upsert(td.name, mk(td, Map("id" -> 2L, "company_number" -> "X2")))
     assert(store.read(td.name).count() == 2)
     assert(!lockPath.exists(), "lock must be released after the write")
+  }
+
+  test("TableStore crash between stage and marker: the previous version serves, a retry heals") {
+    import graft.sources.VersionedStore
+    val store = freshStore()
+    val td = Catalog.companies
+    def numbers() = store.read(td.name).select("company_number")
+      .collect().map(_.getString(0)).toSet
+    store.overwrite(td.name, mk(td, Map("id" -> 1L, "company_number" -> "X1")))
+    // CRASH SIM: the upsert's next snapshot stages in full, the marker
+    // create never happens — readers must keep serving the old version
+    val staged = VersionedStore.stageVersion(spark, store.path(td.name),
+      mk(td, Map("id" -> 1L, "company_number" -> "X1"),
+        Map("id" -> 2L, "company_number" -> "X2")))
+    assert(numbers() == Set("X1"), "an uncommitted stage must not serve")
+    assert(store.exists(td.name))
+    // the retry re-derives the same version from the markers and
+    // overwrites the orphan
+    store.upsert(td.name, mk(td, Map("id" -> 3L, "company_number" -> "X3")))
+    assert(VersionedStore.latest(spark, store.path(td.name)).contains(staged))
+    assert(numbers() == Set("X1", "X3"), "the retry must commit its own rows")
+    assert(store.keyViolations(td.name).count() == 0)
+    // retention keeps exactly the committed version and the one before
+    assert(VersionedStore.versions(spark, store.path(td.name)) ==
+      Seq(staged - 1, staged))
+  }
+
+  test("TableStore: a read racing a writer never finds the table missing") {
+    val store = freshStore()
+    val td = Catalog.companies
+    def rows(n: Long) = mk(td, (1L to n).map(i =>
+      Map[String, Any]("id" -> i, "company_number" -> f"$i%08d")): _*)
+    store.overwrite(td.name, rows(3L))
+    @volatile var writing = true
+    @volatile var writeErr: Throwable = null
+    val writer = new Thread(() => {
+      try (0 until 6).foreach { i =>
+        store.overwrite(td.name, rows(if (i % 2 == 0) 5L else 3L))
+        Thread.sleep(100)
+      } catch { case t: Throwable => writeErr = t }
+      finally writing = false
+    })
+    writer.start()
+    val seen = scala.collection.mutable.Set[Long]()
+    var reads = 0
+    while (writing) { seen += store.read(td.name).count(); reads += 1 }
+    writer.join()
+    assert(writeErr == null, s"writer failed: $writeErr")
+    assert(reads > 0)
+    assert(seen.subsetOf(Set(3L, 5L)),
+      s"a racing read saw a missing or partial table: $seen")
   }
 
   test("overwrite rejects a frame missing catalog columns") {

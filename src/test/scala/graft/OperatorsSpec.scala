@@ -1623,7 +1623,7 @@ class OperatorsSpec extends AnyFunSuite {
       "redelivered batch must be skipped without re-appending")
     val knownPlan = Retrieval.knownIds(spark, tag)
       .queryExecution.executedPlan.toString
-    assert(knownPlan.contains("ids_e") && !knownPlan.contains("post_e"),
+    assert(knownPlan.contains("ids_v_") && !knownPlan.contains("post_v_"),
       s"ingest guard must scan the id list, not the postings:\n$knownPlan")
     // zero-posting docs (empty/whitespace text) live in the ids list
     // WITHOUT postings rows — legitimately. A crash repair must UNION
@@ -1684,7 +1684,7 @@ class OperatorsSpec extends AnyFunSuite {
     Retrieval.deleteFromIndex(spark,
       docs.filter(col("doc_id") % 6 === 0).select("doc_id"), "doc_id", tag)
     val before = canon(Retrieval.serveIndex(spark, "doc_id", q, 5, tag))
-    // CRASH SIM: era 1 fully staged, marker never created — then the
+    // CRASH SIM: version 1 fully staged, marker never created — then the
     // process dies (catalog entries are per-JVM; drop them) and a fresh
     // session recovers from the marker files alone
     val staged = Retrieval.compactStage(spark, tag, "doc_id", buckets = 8)
@@ -1692,25 +1692,25 @@ class OperatorsSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS g_bm25_${k}_$tag"))
     Retrieval.openIndex(spark, tag)
     assert(canon(Retrieval.serveIndex(spark, "doc_id", q, 5, tag)) == before,
-      "recovery after a crash mid-compaction must serve the OLD era, " +
+      "recovery after a crash mid-compaction must serve the OLD version, " +
         "tombstones still applied")
     assert(spark.table(s"g_bm25_tomb_$tag").count() > 0,
-      "the old era's tombstones must still be live after the aborted swap")
+      "the old version's tombstones must still be live after the aborted commit")
     // recovery also RECLAIMS the orphaned stage — a crashed compaction
     // must not leak a full staged copy of the index
     val stagedDir = new java.io.File(
-      s"${graft.sources.Bucketing.processRoot}/bm25_$tag/post_e$staged")
-    assert(!stagedDir.exists, s"staged era dir must be GC'd: $stagedDir")
+      s"${graft.sources.Bucketing.processRoot}/bm25_$tag/post_v_$staged")
+    assert(!stagedDir.exists, s"staged version dir must be GC'd: $stagedDir")
     // a RE-RUN compaction (not a resumed commit — its stage is gone)
-    // completes the swap: serve identical, tombstones folded away
+    // completes the commit: serve identical, tombstones folded away
     Retrieval.compactIndex(spark, tag, "doc_id")
     assert(canon(Retrieval.serveIndex(spark, "doc_id", q, 5, tag)) == before,
       "the committed compaction must serve identically")
     assert(spark.table(s"g_bm25_tomb_$tag").count() == 0,
-      "the new era starts with no tombstones")
+      "the new version starts with no tombstones")
   }
 
-  test("IndexStore.withWriterLock: concurrent compaction fails fast, era state stays consistent") {
+  test("VersionedStore.withWriterLock: concurrent compaction fails fast, version state stays consistent") {
     val sf = "/root/testdata/sf0.001"
     val docs = graft.Tables.load(spark, sf, "documents")
     val q = Seq(1L -> Seq("spark", "join"))
@@ -1722,26 +1722,26 @@ class OperatorsSpec extends AnyFunSuite {
     val base = s"${graft.sources.Bucketing.processRoot}/bm25_$tag"
     // writer A holds the lock (an in-flight compaction); writer B's
     // compaction must fail FAST — not interleave into the same staged
-    // era directory — and leave the served index untouched
-    IndexStore.withWriterLock(spark, base) {
+    // version directory — and leave the served index untouched
+    graft.sources.VersionedStore.withWriterLock(spark, base) {
       val e = intercept[IllegalStateException] {
         Retrieval.compactIndex(spark, tag, "doc_id")
       }
       assert(e.getMessage.contains("locked by a live writer"), e.getMessage)
     }
-    assert(IndexStore.readEra(spark, base).get == 0L,
-      "blocked writer must not have advanced the era")
+    assert(graft.sources.VersionedStore.latest(spark, base).get == 0L,
+      "blocked writer must not have advanced the version")
     assert(canon(Retrieval.serveIndex(spark, "doc_id", q, 5, tag)) == before)
     // the lock releases on exit (even via the throw above): a retry
-    // succeeds and the era advances exactly once
+    // succeeds and the version advances exactly once
     Retrieval.compactIndex(spark, tag, "doc_id")
-    assert(IndexStore.readEra(spark, base).get == 1L)
+    assert(graft.sources.VersionedStore.latest(spark, base).get == 1L)
     assert(canon(Retrieval.serveIndex(spark, "doc_id", q, 5, tag)) == before)
     // APPENDS and TOMBSTONE WRITES enforce the same contract (the
     // mechanism is one shared withWriterLock across all three index
     // families): blocked mutators fail fast and leave the serve
     // untouched; both succeed once the lock is free
-    IndexStore.withWriterLock(spark, base) {
+    graft.sources.VersionedStore.withWriterLock(spark, base) {
       intercept[IllegalStateException] {
         Retrieval.appendToIndex(spark,
           Seq((9901L, "lock probe text")).toDF("doc_id", "text"),
@@ -1763,7 +1763,7 @@ class OperatorsSpec extends AnyFunSuite {
       "post-release delete lands its tombstone")
     // the versioned store enforces the same contract on commit/commitAll
     val vbase = s"${graft.sources.Bucketing.processRoot}/vlock_test"
-    IndexStore.withWriterLock(spark, vbase) {
+    graft.sources.VersionedStore.withWriterLock(spark, vbase) {
       intercept[IllegalStateException] {
         graft.sources.VersionedStore.commit(spark, vbase, Seq(1L).toDF("x"))
       }
@@ -1871,7 +1871,7 @@ class OperatorsSpec extends AnyFunSuite {
     // the guard's plan reads the compact id list, never the postings
     val knownPlan = PhraseIndex.knownIds(spark, tag)
       .queryExecution.executedPlan.toString
-    assert(knownPlan.contains("ids_e") && !knownPlan.contains("post_e"),
+    assert(knownPlan.contains("ids_v_") && !knownPlan.contains("post_v_"),
       s"ingest guard must scan the id list, not the postings:\n$knownPlan")
   }
 
@@ -1922,9 +1922,9 @@ class OperatorsSpec extends AnyFunSuite {
     import org.apache.spark.sql.SaveMode
     val stale = Seq((0L, "2")).toDF("gen", "lens")
     stale.repartition(1).write.mode(SaveMode.Overwrite)
-      .parquet(graft.operators.IndexStore.statsDir(
-        s"${graft.sources.Bucketing.processRoot}/phrase_$tag",
-        graft.operators.IndexStore.readEra(spark,
+      .parquet(graft.sources.VersionedStore.tableDir(
+        s"${graft.sources.Bucketing.processRoot}/phrase_$tag", "stats",
+        graft.sources.VersionedStore.latest(spark,
           s"${graft.sources.Bucketing.processRoot}/phrase_$tag").get))
     spark.catalog.refreshTable(s"g_phr_meta_$tag")
     assert(PhraseIndex.repairMeta(spark, tag),
@@ -2288,7 +2288,7 @@ class OperatorsSpec extends AnyFunSuite {
       "known id must be skipped without touching the postings")
     val knownPlan = AnnIndex.knownIds(spark, tag)
       .queryExecution.executedPlan.toString
-    assert(knownPlan.contains("ids_e") && !knownPlan.contains("post_e"),
+    assert(knownPlan.contains("ids_v_") && !knownPlan.contains("post_v_"),
       s"ingest guard must scan the id list, not the postings:\n$knownPlan")
     // deterministic serve: re-appending a STILL-LIVE id with a changed
     // vector serves the newest generation (max-gen, not an arbitrary
@@ -2300,23 +2300,23 @@ class OperatorsSpec extends AnyFunSuite {
         k = 10, nprobe = 4, tag = tag)
       .filter($"cand_id" === 7L).select("cos").as[Double].collect().head
     assert(cos7() > 0.999, "newest generation's vector must score")
-    // compaction retains ONLY the new era: markers first, then every
-    // _e0 table directory (post/cent/tomb/meta/ids) — and serve holds
+    // compaction retains ONLY the new version: markers first, then every
+    // _v_0 table directory (post/cent/tomb/meta/ids) — and serve holds
     AnnIndex.compactIndex(spark, tag)
     val baseDir = new java.io.File(
       s"${graft.sources.Bucketing.processRoot}/ann_$tag")
-    Seq("post_e0", "cent_e0", "tomb_e0", "meta_e0", "ids_e0", "era/e_0")
+    Seq("post_v_0", "cent_v_0", "tomb_v_0", "meta_v_0", "ids_v_0", "ver/c_0")
       .foreach(d => assert(!new java.io.File(baseDir, d).exists, s"$d must be dropped"))
-    assert(new java.io.File(baseDir, "era/e_1").exists)
+    assert(new java.io.File(baseDir, "ver/c_1").exists)
     assert(cos7() > 0.999, "serve must hold across retention cleanup")
     // compaction folds the claim watermark (6: claims 1-6 issued above)
-    // into the new era's meta and truncates the markers — the claim
+    // into the new version's meta and truncates the markers — the claim
     // list stays O(appends since last compaction)
     assert(IndexStore.maxClaimedGen(spark, baseDir.toString).isEmpty,
       "claim markers must be truncated after compaction")
     assert(spark.table(s"g_ann_meta_$tag").select("gen")
       .as[Long].collect().head == 6L,
-      "new era meta must carry the folded watermark")
+      "new version meta must carry the folded watermark")
     // and the next claim resumes strictly above the folded floor
     AnnIndex.appendToIndex(spark, Seq((43L, vec(43L))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", tag)
@@ -2354,26 +2354,34 @@ class OperatorsSpec extends AnyFunSuite {
       k = 3, nprobe = 3, tag = tag).count() > 0, "index must still serve")
   }
 
-  test("IndexStore.dropOldEras: suffix match cannot cross eras; markers deleted before data") {
+  test("VersionedStore.retainFrom: suffix match cannot cross versions; markers deleted before data") {
     import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files.createTempDirectory("graft_eras")
+    import graft.sources.VersionedStore
+    val base = java.nio.file.Files.createTempDirectory("graft_vers")
       .toString + "/idx"
     val fs = new Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // fabricate eras 1, 10, 11 with assorted per-era table dirs — the
-    // underscore in the `_e<N>` suffix is what keeps era 1's cleanup
-    // away from era 10's directories
-    Seq("post_e1", "cent_e1", "ids_e1", "post_e10", "meta_e11")
+    // fabricate versions 1, 10, 11 with assorted member-table dirs — the
+    // exact numeric parse of the `_v_<N>` suffix is what keeps version
+    // 1's cleanup away from version 10's directories
+    Seq("post_v_1", "cent_v_1", "ids_v_1", "post_v_10", "meta_v_11")
       .foreach(d => fs.mkdirs(new Path(s"$base/$d")))
-    Seq(1L, 10L, 11L).foreach(e =>
-      graft.operators.IndexStore.commitEra(spark, base, e))
-    graft.operators.IndexStore.dropOldEras(spark, base, keep = 10L)
-    assert(!fs.exists(new Path(s"$base/era/e_1")), "old marker must go")
-    Seq("post_e1", "cent_e1", "ids_e1").foreach(d =>
+    Seq(1L, 10L, 11L).foreach(v => VersionedStore.commitVersion(spark, base, v))
+    VersionedStore.retainFrom(spark, base, keep = 10L)
+    assert(!fs.exists(new Path(s"$base/ver/c_1")), "old marker must go")
+    Seq("post_v_1", "cent_v_1", "ids_v_1").foreach(d =>
       assert(!fs.exists(new Path(s"$base/$d")), s"$d must be dropped"))
-    Seq("post_e10", "meta_e11").foreach(d =>
-      assert(fs.exists(new Path(s"$base/$d")), s"$d must survive era-1 cleanup"))
-    assert(graft.operators.IndexStore.readEra(spark, base).contains(11L))
+    Seq("post_v_10", "meta_v_11").foreach(d =>
+      assert(fs.exists(new Path(s"$base/$d")), s"$d must survive version-1 cleanup"))
+    assert(VersionedStore.latest(spark, base).contains(11L))
+    // the same exact parse guards gcStaged: uncommitted v_1 and v_12
+    // go, committed v_10/v_11 stay
+    Seq("ids_v_1", "post_v_12").foreach(d => fs.mkdirs(new Path(s"$base/$d")))
+    assert(VersionedStore.gcStaged(spark, base) == Seq(1L, 12L))
+    Seq("ids_v_1", "post_v_12").foreach(d =>
+      assert(!fs.exists(new Path(s"$base/$d")), s"$d must be reclaimed"))
+    Seq("post_v_10", "meta_v_11").foreach(d =>
+      assert(fs.exists(new Path(s"$base/$d")), s"$d must survive gcStaged"))
   }
 
   test("ssspFixed: unit weights reduce to BFS hops; strong 2-hop route beats a weak direct edge") {

@@ -202,16 +202,33 @@ class ChHttpSourceSpec extends AnyFunSuite {
       assert(n3 == 0L && w3 == "2024-12-31")
       assert(stub.requestLog.isEmpty, "covered window must not hit the API")
       assert(ChHarvest.table(spark, base).count() == companies.size)
-      // crash recovery: a run that died between the table swap and the
-      // watermark write leaves the OLD watermark — the retry re-covers
-      // the window and the business-key upsert keeps the table exact
-      val f = org.apache.hadoop.fs.FileSystem.getLocal(
-        new org.apache.hadoop.conf.Configuration())
-      val wm = new org.apache.hadoop.fs.Path(s"$base/__watermark")
-      val o = f.create(wm, true)
-      o.write("2024-02-29".getBytes("UTF-8")); o.close()
+    }
+  }
+
+  test("ChHarvest crash between stage and marker: table and watermark agree, a retry re-covers the window") {
+    withStub() { (url, stub) =>
+      import graft.operators.ChHarvest
+      val base = java.nio.file.Files
+        .createTempDirectory("ch_harvest_crash").toString
+      def froms() = stub.requestLog.asScala.map(_._1)
+        .flatMap(_.split("[?&]").find(_.startsWith("incorporated_from=")))
+        .toSet
+      val wantFeb = companies.count(_("date_of_creation") <= "2024-02-29")
+      ChHarvest.harvest(spark, url, base, "2024-02-29", callsPerSec = 1000)
+      // CRASH SIM: the next run fetches and stages its merged table with
+      // the advanced watermark, then dies before the marker
+      assert(ChHarvest.stage(spark, url, base, "2024-12-31", splits = 1,
+        start = "2000-01-01", callsPerSec = 1000).isRight)
+      val t = ChHarvest.table(spark, base)
+      assert(t.count() == wantFeb, "an uncommitted stage must not serve")
+      assert(t.filter(col("date_of_creation") > "2024-02-29").isEmpty,
+        "the table must hold nothing past its committed watermark")
+      // the retry starts from the committed watermark, so it re-covers
+      // the window, and the business-key upsert keeps the table exact
+      stub.requestLog.clear()
       val (n4, w4) = ChHarvest.harvest(spark, url, base, "2024-12-31",
         callsPerSec = 1000)
+      assert(froms() == Set("incorporated_from=2024-03-01"), froms())
       assert(n4 == companies.size - wantFeb && w4 == "2024-12-31",
         "retry must re-cover the un-watermarked window")
       val t4 = ChHarvest.table(spark, base)
