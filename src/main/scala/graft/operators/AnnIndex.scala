@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.sources.VersionedStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,12 +16,9 @@ import org.apache.spark.sql.functions._
   *    into its `spill` nearest cells (the SPANN boundary-duplication
   *    trade, Chen et al. 2021), written BUCKETED BY cell — a probe is a
   *    bucket-pruned read, never a corpus shuffle;
-  *  - tombstones: (cand_id, upto_gen) retract a vector's postings up to
-  *    that generation — merge-on-read, broadcast at serve, physically
-  *    dropped by [[compactIndex]]'s atomic version commit ([[IndexStore]]);
-  *  - known ids: the compact id list [[ingestNewVectors]] anti-joins
-  *    against, maintained alongside the postings so the redelivery
-  *    guard costs ∝ index CARDINALITY, never a full postings scan;
+  *  - tombstones and the known-ids list: the shared [[IndexStore]]
+  *    lifecycle (merge-on-read, enforced bound, atomic compaction,
+  *    redelivery guard), keyed by `cand_id`;
   *  - meta: generation counter + the index GEOMETRY (spill, seedStride,
   *    buckets). Geometry is persisted at build and read back by every
   *    later operation — a caller-supplied bucket count that disagreed
@@ -64,13 +60,7 @@ import org.apache.spark.sql.functions._
   * the beyond-reference training-data surface. */
 object AnnIndex {
 
-  private def postTable(tag: String) = s"g_ann_post_$tag"
-  private def centTable(tag: String) = s"g_ann_cent_$tag"
-  private def tombTable(tag: String) = s"g_ann_tomb_$tag"
-  private def metaTable(tag: String) = s"g_ann_meta_$tag"
-  private def idsTable(tag: String) = s"g_ann_ids_$tag"
-  private def indexBase(tag: String) =
-    s"${graft.sources.Bucketing.processRoot}/ann_$tag"
+  private val store = new IndexStore("ann", "ann", "cell", Seq("cent", "meta"))
 
   /** Persisted index geometry + generation counter (the 1-row meta).
     * `words` = ceil(dims/32) sign-code words measured at build time —
@@ -93,44 +83,19 @@ object AnnIndex {
 
   private def readMeta(spark: org.apache.spark.sql.SparkSession,
       tag: String): Meta =
-    parseMeta(spark.table(metaTable(tag)).collect().head)
+    parseMeta(spark.table(store.table(tag, "meta")).collect().head)
 
-  private def dir(tag: String, table: String, v: Long) =
-    VersionedStore.tableDir(indexBase(tag), table, v)
-
-  private def registerTables(spark: org.apache.spark.sql.SparkSession,
-      tag: String, v: Long, buckets: Int): Unit = {
-    IndexStore.registerBucketed(spark, postTable(tag), dir(tag, "post", v),
-      "cell", buckets)
-    IndexStore.registerParquet(spark, centTable(tag), dir(tag, "cent", v))
-    IndexStore.registerParquet(spark, tombTable(tag), dir(tag, "tomb", v))
-    IndexStore.registerParquet(spark, metaTable(tag), dir(tag, "meta", v))
-    IndexStore.registerParquet(spark, idsTable(tag), dir(tag, "ids", v))
-  }
-
-  /** Recover an index built by a previous session (or after a crash):
-    * re-derive the catalog entries from the newest COMMITTED version's
-    * directories — markers are the only truth, so a crash mid-compaction
-    * (version N+1 staged, no marker) recovers to the complete N. The
+  /** Recover an index built by a previous session (or after a crash)
+    * from the newest COMMITTED version ([[IndexStore.open]]). The
     * bucket count comes from the PERSISTED meta, never from the caller
     * (a mismatched CLUSTERED BY spec would silently mis-prune probe
-    * joins), and the known-ids list is restated if an append crashed
-    * between its two writes ([[repairKnownIds]] — safe to run on every
-    * recovery, one distinct over the postings). */
+    * joins); the meta is read straight from its directory, since the
+    * catalog entries are what this call is about to (re)create. */
   def openIndex(spark: org.apache.spark.sql.SparkSession,
       tag: String): Unit = {
-    val base = indexBase(tag)
-    val v = VersionedStore.latest(spark, base).getOrElse(
-      sys.error(s"ANN index '$tag' has no committed version"))
-    // meta read straight from its directory — the catalog entries are
-    // what this call is about to (re)create
-    val m = parseMeta(
-      spark.read.parquet(dir(tag, "meta", v)).collect().head)
-    registerTables(spark, tag, v, m.buckets)
-    repairKnownIds(spark, tag)
-    // reclaim any version a crashed compaction staged but never committed
-    VersionedStore.gcStaged(spark, base)
-    ()
+    val meta = store.dir(tag, "meta", store.version(spark, tag))
+    store.open(spark, tag,
+      parseMeta(spark.read.parquet(meta).collect().head).buckets)
   }
 
   /** Cell assignment against a given centroid table: each row of `df`
@@ -200,48 +165,23 @@ object AnnIndex {
       candidates: => DataFrame, idCol: String, vecCol: String, tag: String,
       seedStride: Int, spill: Int, buckets: Int = 8,
       maxCells: Int = DefaultMaxCells): Unit =
-    graft.sources.Bucketing.ensureOnce(s"ann@$tag#$seedStride#$spill#$buckets") {
-      // every PUBLIC mutator holds the store's writer lock: builds,
-      // appends, and tombstone writes all race compaction's commit (and
-      // each other's gen claims) without it
-      val built = VersionedStore.publish(spark, indexBase(tag)) { v =>
-        val c = candidates.select(col(idCol).as("cand_id"),
-          col(vecCol).as("cv")).cache()
+    store.build(spark, tag, s"$seedStride#$spill#$buckets", buckets,
+        "cand_id",
+        candidates.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))) {
+      (v, c) =>
         val words = math.max(1, (measuredDims(c) + 31) / 32)
         val cents = c.filter(col("cand_id") % seedStride === 0)
           .select(col("cand_id").as("cent_id"), col("cv").as("cent_v"))
         requireCellBudget(cents.count(), c.count(), seedStride, maxCells,
           s"buildIndex($tag)")
-        IndexStore.stagePlain(cents, dir(tag, "cent", v))
-        val post = withCodes(assignCells(cents, c, "cand_id", "cv", keep = spill)
-          .select(col("cell"), col("cand_id"), col("cv"), lit(0L).as("gen")),
-          words)
-        IndexStore.stageBucketed(post, dir(tag, "post", v), "cell", buckets)
-        IndexStore.stagePlain(
-          post.select(col("cand_id"), col("gen").as("upto_gen")).limit(0),
-          dir(tag, "tomb", v))
-        IndexStore.stageIds(c.select("cand_id").distinct(),
-          dir(tag, "ids", v), "cand_id")
+        IndexStore.stagePlain(cents, store.dir(tag, "cent", v))
         IndexStore.stagePlain(
           metaFrame(spark, Meta(0L, spill, seedStride, buckets, words)),
-          dir(tag, "meta", v))
-        c.unpersist()
-      }
-      registerTables(spark, tag, built, buckets)
+          store.dir(tag, "meta", v))
+        withCodes(assignCells(cents, c, "cand_id", "cv", keep = spill)
+          .select(col("cell"), col("cand_id"), col("cv"), lit(0L).as("gen")),
+          words)
     }
-
-  /** Live postings through the tombstones: a posting row serves unless
-    * a tombstone covers its generation. Tombstone side broadcast —
-    * bounded by deletes since compaction. */
-  private def livePostings(spark: org.apache.spark.sql.SparkSession,
-      tag: String): DataFrame = {
-    val post = spark.table(postTable(tag))
-    val tomb = spark.table(tombTable(tag))
-      .groupBy("cand_id").agg(max("upto_gen").as("upto_gen"))
-    post.join(broadcast(tomb), Seq("cand_id"), "left_outer")
-      .filter(col("upto_gen").isNull || col("gen") > col("upto_gen"))
-      .drop("upto_gen")
-  }
 
   /** Serve a query batch from the stored index: queries assign to their
     * `nprobe` cells against the broadcast centroid table, probe the
@@ -290,9 +230,8 @@ object AnnIndex {
       queries: DataFrame, idCol: String, vecCol: String, labelCol: String,
       k: Int, nprobe: Int, tag: String, candLabels: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(spark.catalog.tableExists(postTable(tag)),
-      s"ANN index '$tag' must be built/opened first")
-    val cents = spark.table(centTable(tag))
+    store.requireOpen(spark, tag)
+    val cents = spark.table(store.table(tag, "cent"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       col(labelCol).as("q_label"))
     val cellQ = assignCells(cents, q, "query_id", "qv", keep = nprobe)
@@ -300,7 +239,7 @@ object AnnIndex {
       col(candLabels.columns(0)).as("cand_id"),
       col(candLabels.columns(1)).as("c_label"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    livePostings(spark, tag)
+    store.live(spark, tag)
       .join(broadcast(cellQ.select("cell", "query_id", "qv", "q_label")),
         Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
@@ -320,16 +259,15 @@ object AnnIndex {
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int, tag: String, allowed: Option[DataFrame]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(spark.catalog.tableExists(postTable(tag)),
-      s"ANN index '$tag' must be built/opened first")
-    val cents = spark.table(centTable(tag))
+    store.requireOpen(spark, tag)
+    val cents = spark.table(store.table(tag, "cent"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val cellQ = assignCells(cents, q, "query_id", "qv", keep = nprobe)
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
     // ONE postings pass: the probe join carries cv along; spill replicas
     // of one generation are byte-identical, so max_by(cos, gen) both
     // dedups them and resolves multi-generation candidates newest-wins
-    val probed = livePostings(spark, tag)
+    val probed = store.live(spark, tag)
       .join(broadcast(cellQ.select("cell", "query_id", "qv")), Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
     // the metadata filter prunes BEFORE the cosine math
@@ -358,9 +296,8 @@ object AnnIndex {
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int, tag: String, shortlist: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(spark.catalog.tableExists(postTable(tag)),
-      s"ANN index '$tag' must be built/opened first")
-    val cents = spark.table(centTable(tag))
+    store.requireOpen(spark, tag)
+    val cents = spark.table(store.table(tag, "cent"))
     val words = readMeta(spark, tag).words
     val bCols = (0 until words).map(w => s"b$w")
     val qbCols = (0 until words).map(w => s"qb$w")
@@ -370,11 +307,7 @@ object AnnIndex {
       d.withColumn(s"qb$w", expr(Similarity.signWordExpr("qv", w, 32))))
     // stage 1 — codes only: a live view WITHOUT cv, so pruning drops
     // the vector column from the postings scan entirely
-    val tomb = spark.table(tombTable(tag))
-      .groupBy("cand_id").agg(max("upto_gen").as("upto_gen"))
-    val codes = spark.table(postTable(tag))
-      .join(broadcast(tomb), Seq("cand_id"), "left_outer")
-      .filter(col("upto_gen").isNull || col("gen") > col("upto_gen"))
+    val codes = store.live(spark, tag)
       .select(("cell" +: "cand_id" +: "gen" +: bCols).map(col): _*)
     val wh = Window.partitionBy("query_id").orderBy(col("ham"), col("cand_id"))
     val short = codes
@@ -394,7 +327,7 @@ object AnnIndex {
     // cand_id touches each shortlisted id's replicas; cosine is
     // cell-independent, so this equals scoring the probed pair)
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    livePostings(spark, tag)
+    store.live(spark, tag)
       .join(broadcast(short), Seq("cand_id"))
       .join(broadcast(q), Seq("query_id"))
       .withColumn("cos", Similarity.cosine(col("qv"), col("cv")))
@@ -414,12 +347,9 @@ object AnnIndex {
     * per-append-∝-corpus cost); the crash-sim proof is the drop-table
     * test — this succeeds with the postings table unregistered. */
   private[graft] def claimNextGen(spark: org.apache.spark.sql.SparkSession,
-      tag: String): Long = {
-    val tombMax = spark.table(tombTable(tag))
-      .agg(coalesce(max("upto_gen"), lit(0L))).collect().head.getLong(0)
-    val floor = math.max(readMeta(spark, tag).gen, tombMax)
-    IndexStore.claimGen(spark, indexBase(tag), floor)
-  }
+      tag: String): Long =
+    IndexStore.claimGen(spark, store.base(tag),
+      math.max(readMeta(spark, tag).gen, store.tombMax(spark, tag)))
 
   /** Ingest a batch: assign against the STORED centroids (frozen
     * geometry — see object doc), append postings at the next
@@ -446,12 +376,10 @@ object AnnIndex {
     // overwrite-create, not exclusive — the LOCK is the exclusion),
     // and an append racing a compaction's commit would write
     // postings into the version being retired
-    VersionedStore.withWriterLock(spark, indexBase(tag)) {
+    store.withLock(spark, tag) {
       val (_, _, b) = appendPostingsOnly(spark, batch, idCol, vecCol, tag)
-      b.select("cand_id").distinct().write.mode("append").format("parquet")
-        .saveAsTable(idsTable(tag))
+      store.appendIds(spark, tag, b.select("cand_id"))
       b.unpersist()
-      spark.catalog.refreshTable(idsTable(tag))
     }
 
   /** The claim + postings write of [[appendToIndex]] alone — package-
@@ -463,11 +391,10 @@ object AnnIndex {
   private[graft] def appendPostingsOnly(
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
       idCol: String, vecCol: String, tag: String): (Meta, Long, DataFrame) = {
-    require(spark.catalog.tableExists(postTable(tag)),
-      s"ANN index '$tag' must be built/opened first")
+    store.requireOpen(spark, tag)
     val m = readMeta(spark, tag)
     val gen = claimNextGen(spark, tag)
-    val cents = spark.table(centTable(tag))
+    val cents = spark.table(store.table(tag, "cent"))
     val b = batch.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
       .cache()
     val dims = measuredDims(b)
@@ -478,9 +405,7 @@ object AnnIndex {
     val post = withCodes(assignCells(cents, b, "cand_id", "cv", keep = m.spill)
       .select(col("cell"), col("cand_id"), col("cv"), lit(gen).as("gen")),
       m.words)
-    post.write.mode("append").bucketBy(m.buckets, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(postTable(tag))
-    spark.catalog.refreshTable(postTable(tag))
+    store.appendPostings(spark, tag, post, m.buckets)
     (m, gen, b)
   }
 
@@ -488,85 +413,37 @@ object AnnIndex {
     * the COMPACT id list, never the postings (package-private so the
     * plan test can pin that property). */
   private[graft] def knownIds(spark: org.apache.spark.sql.SparkSession,
-      tag: String): DataFrame = spark.table(idsTable(tag))
+      tag: String): DataFrame = store.knownIds(spark, tag)
 
-  /** Restate the known-ids list from the postings if an append crashed
-    * between the postings write and the ids write (ids can only be
-    * MISSING entries — every other path stages them together). UNION
-    * with the surviving list, not a replacement — ids may legitimately
-    * be a superset of the postings ids (a batch assigned against an
-    * empty centroid set stages no postings; the sibling index families
-    * have zero-posting docs by construction, and the three repairers
-    * keep one contract). One distinct over the postings, run only on
-    * recovery. Returns true when a repair was needed. */
+  /** Restate the known-ids list after an append crashed between the
+    * postings and ids writes ([[IndexStore.repairKnownIds]]); the
+    * recovery path [[openIndex]] runs it. */
   def repairKnownIds(spark: org.apache.spark.sql.SparkSession,
-      tag: String): Boolean = {
-    val surviving = knownIds(spark, tag).select("cand_id")
-    val truth = spark.table(postTable(tag)).select("cand_id")
-      .unionByName(surviving).distinct().localCheckpoint()
-    val drifted = truth.count() > surviving.distinct().count()
-    if (drifted) {
-      val v = VersionedStore.latest(spark, indexBase(tag)).get
-      IndexStore.stageIds(truth, dir(tag, "ids", v), "cand_id")
-      spark.catalog.refreshTable(idsTable(tag))
-    }
-    drifted
-  }
+      tag: String): Boolean = store.repairKnownIds(spark, tag)
 
-  /** Streaming-ingest guard (the foreachBatch body, mirroring
-    * Retrieval.ingestNewDocs): drop vectors the index already holds —
-    * at-least-once redelivery — and intra-batch duplicates, then append
-    * the remainder. The known set is the COMPACT id list, so the guard
-    * costs ∝ index cardinality per batch, never a postings scan
-    * (round-9 verdict item 3). The anti-join result is pinned with a
-    * localCheckpoint because the append mutates the id table the guard
-    * read. Tombstoned ids count as known until a compaction physically
-    * retires them: an intentional re-add is an upsert decision, not an
-    * ingest side-effect. */
+  /** Streaming-ingest guard, the foreachBatch body
+    * ([[IndexStore.ingestNew]]): vectors the index already holds —
+    * at-least-once redelivery, or tombstoned until a compaction retires
+    * them — and intra-batch duplicates are dropped before the append;
+    * an intentional re-add is an upsert decision. */
   def ingestNewVectors(spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, idCol: String, vecCol: String, tag: String): Unit = {
-    val known = knownIds(spark, tag).select(col("cand_id").as(idCol))
-    val fresh = batch.dropDuplicates(Seq(idCol))
-      .join(known, Seq(idCol), "left_anti").localCheckpoint()
-    if (fresh.limit(1).count() > 0)
-      appendToIndex(spark, fresh, idCol, vecCol, tag)
-  }
+      batch: DataFrame, idCol: String, vecCol: String, tag: String): Unit =
+    store.ingestNew(spark, tag, batch, idCol)(
+      appendToIndex(spark, _, idCol, vecCol, tag))
 
   /** Retract ids: tombstone each doomed vector at its CURRENT live
-    * generation (computed from the pre-delete snapshot, pinned with a
-    * localCheckpoint because the tombstone table is about to grow).
-    * The serve-time broadcast bound is enforced the Retrieval way:
-    * past `maxTombstones`, auto-compact. */
+    * generation ([[IndexStore.delete]]); past `maxTombstones`,
+    * auto-compact. */
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, idCol: String, tag: String,
-      maxTombstones: Long = Retrieval.DefaultMaxTombstones): Unit = {
-    require(spark.catalog.tableExists(postTable(tag)),
-      s"ANN index '$tag' must be built/opened first")
-    val doomed = livePostings(spark, tag)
-      .join(ids.select(col(idCol).as("cand_id")).distinct(), Seq("cand_id"))
-      .groupBy("cand_id").agg(max("gen").as("upto_gen"))
-      .localCheckpoint()
-    // tombstone write under the writer lock; the auto-compaction runs
-    // AFTER release (withWriterLock is not re-entrant, and compactIndex
-    // takes its own hold — the gap between the two is safe: the lock
-    // exists to fail fast on true concurrent writers, not to order the
-    // single logical writer's own steps)
-    val needCompact = doomed.limit(1).count() > 0 &&
-      VersionedStore.withWriterLock(spark, indexBase(tag)) {
-        doomed.write.mode("append").format("parquet")
-          .saveAsTable(tombTable(tag))
-        spark.catalog.refreshTable(tombTable(tag))
-        spark.table(tombTable(tag)).count() > maxTombstones
-      }
-    if (needCompact) compactIndex(spark, tag)
-  }
+      maxTombstones: Long = IndexStore.DefaultMaxTombstones): Unit =
+    store.delete(spark, tag, ids, idCol, maxTombstones)(compactIndex(spark, tag))
 
-  /** Physically drop tombstoned postings: stage the filtered postings,
-    * centroids, empty tombstones, known ids, and meta as version N+1,
-    * commit with one marker create, re-register, drop version N — a
-    * crash mid-compaction leaves N complete and servable (the
-    * VersionedStore contract), and retention is automatic (old versions
-    * can no longer accumulate unbounded under continuous maintenance).
+  /** Physically drop tombstoned postings ([[IndexStore.compact]]): the
+    * filtered postings, centroids, empty tombstones, known ids and meta
+    * are staged as version N+1 and committed with one marker create, so
+    * a crash mid-compaction leaves N complete and servable, and older
+    * versions are dropped (retention is automatic).
     *
     * `recluster = true` additionally re-derives the coarse quantizer
     * from the LIVE corpus — the remediation path for the drift
@@ -575,29 +452,30 @@ object AnnIndex {
     * id, new centroids come from the same deterministic id-stride rule
     * the build used, and every survivor re-assigns to its `spill`
     * nearest new cells. One corpus pass — paid exactly when compaction
-    * rewrites the corpus anyway. */
+    * rewrites the corpus anyway.
+    *
+    * The new version's meta carries the generation watermark, so the
+    * claim markers at or below it are truncated after the commit — the
+    * floor survives in 1 row, and a marker lost to a crash
+    * mid-truncation is harmless (only the max is observable). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, tag: String,
       recluster: Boolean = false): Unit = {
-    val base = indexBase(tag)
-    VersionedStore.withWriterLock(spark, base) {
-      compactIndexLocked(spark, tag, recluster)
-    }
+    val buckets = readMeta(spark, tag).buckets
+    store.compact(spark, tag, buckets)(store.compactStage(spark, tag, buckets)(
+      compactMembers(spark, tag, _, _, recluster)))
+    IndexStore.truncateGenClaims(spark, store.base(tag),
+      upto = readMeta(spark, tag).gen)
   }
 
-  private def compactIndexLocked(spark: org.apache.spark.sql.SparkSession,
-      tag: String, recluster: Boolean): Unit = {
-    val base = indexBase(tag)
+  /** Stage version `v`'s centroids and meta (geometry + the folded
+    * watermark) and return the postings to stage: the live rows, or
+    * with `recluster` the survivors re-assigned to fresh centroids. */
+  private def compactMembers(spark: org.apache.spark.sql.SparkSession,
+      tag: String, v: Long, live: DataFrame, recluster: Boolean): DataFrame = {
     val m = readMeta(spark, tag)
-    // fold the generation watermark into the new version's (immutable)
-    // meta, so the claim markers can be truncated after the commit —
-    // the floor survives in 1 row, and any marker lost to a crash
-    // mid-truncation is harmless (only the max is observable)
-    val tombMax = spark.table(tombTable(tag))
-      .agg(coalesce(max("upto_gen"), lit(0L))).collect().head.getLong(0)
-    val watermark = Seq(m.gen, tombMax,
-      IndexStore.maxClaimedGen(spark, base).getOrElse(0L)).max
-    val live = livePostings(spark, tag).localCheckpoint()
-    val frozenCents = spark.table(centTable(tag))
+    val watermark = Seq(m.gen, store.tombMax(spark, tag),
+      IndexStore.maxClaimedGen(spark, store.base(tag)).getOrElse(0L)).max
+    val frozenCents = spark.table(store.table(tag, "cent"))
     val (post, cents) =
       if (!recluster) (live, frozenCents)
       else {
@@ -611,8 +489,8 @@ object AnnIndex {
         // GUARD (round-10 ADVICE, medium): if deletions removed every
         // seed-stride id, the re-derived quantizer is EMPTY — assigning
         // against it would stage zero postings and commit an empty
-        // index while retention deletes the old version (silent loss of the
-        // whole live corpus). Fall back to the frozen centroids: the
+        // index while retention deletes the old version (silent loss of
+        // the whole live corpus). Fall back to the frozen centroids: the
         // compaction still physically drops tombstoned rows; only the
         // re-clustering is declined.
         if (c.limit(1).count() == 0L) (live, frozenCents)
@@ -624,19 +502,9 @@ object AnnIndex {
             m.words), c)
         }
       }
-    val next = VersionedStore.publishLocked(spark, base) { v =>
-      IndexStore.stageBucketed(post, dir(tag, "post", v), "cell", m.buckets)
-      IndexStore.stagePlain(cents, dir(tag, "cent", v))
-      IndexStore.stagePlain(
-        post.select(col("cand_id"), col("gen").as("upto_gen")).limit(0),
-        dir(tag, "tomb", v))
-      IndexStore.stageIds(post.select("cand_id").distinct(),
-        dir(tag, "ids", v), "cand_id")
-      IndexStore.stagePlain(metaFrame(spark, m.copy(gen = watermark)),
-        dir(tag, "meta", v))
-    }
-    registerTables(spark, tag, next, m.buckets)
-    VersionedStore.retainFrom(spark, base, next)
-    IndexStore.truncateGenClaims(spark, base, upto = watermark)
+    IndexStore.stagePlain(cents, store.dir(tag, "cent", v))
+    IndexStore.stagePlain(metaFrame(spark, m.copy(gen = watermark)),
+      store.dir(tag, "meta", v))
+    post
   }
 }

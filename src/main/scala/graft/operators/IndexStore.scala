@@ -1,43 +1,310 @@
 package graft.operators
 
+import graft.sources.{Bucketing, VersionedStore}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Storage helpers for served indexes (BM25 postings, phrase postings,
-  * ANN cells): the writers that stage an index's tables, the catalog
-  * registration that re-opens them, and write-ahead generation claims.
+/** The served-index lifecycle, written once for the three stored index
+  * families — BM25 postings ([[Retrieval]]), phrase postings
+  * ([[PhraseIndex]]) and IVF cells ([[AnnIndex]]). Each family gives
+  * one instance its fixed layout and keeps only what differs: how its
+  * postings are derived and scored, its 1-row meta/stats member and that
+  * row's repair, and (ANN) the centroids, geometry checks and recluster.
   *
-  * Publishing is [[graft.sources.VersionedStore]]'s: an index's tables
-  * (postings / stats / tombstones / known ids, plus ANN's centroids and
-  * meta) are staged as member tables of version N under
-  * `base/<name>_v_N` ([[graft.sources.VersionedStore.tableDir]]), and
-  * one marker create `base/ver/c_N` commits them together. Compaction
-  * stages version N+1 in fresh directories, so a crash before its
-  * marker leaves version N newest and untouched, and a crash after it
-  * leaves N+1 complete by construction. Appends, tombstones and the
-  * 1-row stats write land in place inside the live version, each
-  * covered by its family's repair pass.
+  * Layout of index `tag`: base `processRoot/<family>_<tag>`, catalog
+  * tables `g_<prefix>_<member>_<tag>`, and one
+  * [[graft.sources.VersionedStore]] member directory per table:
+  *  - `post`: postings bucketed by `bucketCol`, each row stamped with the
+  *    generation that appended it;
+  *  - `tomb`: tombstones (id, `tombExtra`…, upto_gen) retracting a doc's
+  *    postings up to that generation;
+  *  - `ids`: the known-ids list — its one column is the STORED id column
+  *    (the caller's id for BM25 and phrase, `cand_id` for ANN);
+  *  - the family's `members` (stats / meta, ANN's centroids).
   *
-  * Tombstones are version-scoped ON PURPOSE: compaction folds them into
-  * the new version's postings and stages an EMPTY tomb table, so the
-  * commit retires the postings and their tombstones in the same atomic
-  * step — a manifest that swapped only the postings would double-apply
-  * the old tombstones' stats corrections.
+  * The cycle:
+  *  - build stages every member as version 0 and commits with one marker
+  *    create ([[VersionedStore.publish]]); `open` re-registers the newest
+  *    committed version, restates the known ids and reclaims any version
+  *    a crashed compaction staged but never committed;
+  *  - serve reads the postings through the tombstones ([[live]]): the
+  *    tombstone max-gens are broadcast and left-outer joined, always —
+  *    the plan does not depend on whether deletes happened, and
+  *    construction launches no job to find out;
+  *  - appends land in place inside the live version (postings, then
+  *    ids, then the family's counter row), each step covered by a repair
+  *    pass; [[ingestNew]] is their redelivery guard;
+  *  - [[delete]] appends tombstones under the writer lock and
+  *    auto-compacts past the bound, since the tombstones are broadcast
+  *    at serve; [[upsert]] is delete-then-append;
+  *  - [[compact]] stages version N+1 in fresh directories (live postings
+  *    with the tombstones folded in, an EMPTY tomb table, the ids), then
+  *    commits it with one marker. A crash before the marker leaves N
+  *    newest and untouched; after it, N+1 is complete by construction.
+  *
+  * Tombstones are version-scoped ON PURPOSE: the commit retires the
+  * postings and their tombstones in the same atomic step — a manifest
+  * that swapped only the postings would double-apply the old
+  * tombstones' stats corrections.
   *
   * The reference keeps its sync state as SQLite rows rewritten in place
   * (DatabaseConverter/database.py); at warehouse scale the equivalent
   * durable primitive is immutable staged directories plus a single-file
-  * commit point (the Iceberg/Delta snapshot-pointer idea, reduced to
-  * what a filesystem gives for free).
-  *
-  * Catalog entries are per-JVM (in-memory session catalog), so
-  * registration is re-derivable state: [[registerParquet]] /
-  * [[registerBucketed]] re-create the table entry over the version's
-  * directory with the schema inferred from the parquet footers —
-  * which is how a fresh session "opens" an index from nothing but the
-  * marker files.
+  * commit point (the Iceberg/Delta snapshot-pointer idea). Catalog
+  * entries are per-JVM, so registration is re-derivable state: a fresh
+  * session opens an index from nothing but the marker files.
   */
+private[graft] final class IndexStore(family: String, prefix: String,
+    bucketCol: String, members: Seq[String], tombExtra: Seq[String] = Nil) {
+  import IndexStore._
+
+  def table(tag: String, member: String): String = s"g_${prefix}_${member}_$tag"
+  def base(tag: String): String = s"${Bucketing.processRoot}/${family}_$tag"
+  def dir(tag: String, member: String, v: Long): String =
+    VersionedStore.tableDir(base(tag), member, v)
+
+  /** The newest committed version. */
+  def version(spark: SparkSession, tag: String): Long =
+    VersionedStore.latest(spark, base(tag)).getOrElse(sys.error(
+      s"$family index '$tag' has no committed version at ${base(tag)}"))
+
+  def requireOpen(spark: SparkSession, tag: String): Unit =
+    require(spark.catalog.tableExists(table(tag, "post")),
+      s"$family index '$tag' must be built or opened first")
+
+  def withLock[T](spark: SparkSession, tag: String)(body: => T): T =
+    VersionedStore.withWriterLock(spark, base(tag))(body)
+
+  /** (Re)register every member over version `v`'s directories. */
+  def register(spark: SparkSession, tag: String, v: Long,
+      buckets: Int): Unit = {
+    registerBucketed(spark, table(tag, "post"), dir(tag, "post", v),
+      bucketCol, buckets)
+    (Seq("tomb", "ids") ++ members).foreach(m =>
+      registerParquet(spark, table(tag, m), dir(tag, m, v)))
+  }
+
+  /** Open an index built by a previous session, or recover after a
+    * crash: the marker files are the only durable truth, so a crash
+    * mid-compaction re-opens the old, complete version. */
+  def open(spark: SparkSession, tag: String, buckets: Int): Unit = {
+    register(spark, tag, version(spark, tag), buckets)
+    repairKnownIds(spark, tag)
+    VersionedStore.gcStaged(spark, base(tag))
+    ()
+  }
+
+  /** Build once per (tag, geometry) — the ONLY read of `source`, which
+    * is cached for the duration. `stage(v, source)` writes the family's
+    * members and returns the generation-0 postings; the postings, an
+    * empty tombstone table and the source's distinct `idCol` values are
+    * staged beside them, and one marker commits the lot. */
+  def build(spark: SparkSession, tag: String, geometry: String,
+      buckets: Int, idCol: String, source: => DataFrame)(
+      stage: (Long, DataFrame) => DataFrame): Unit =
+    Bucketing.ensureOnce(s"$family@$tag#$geometry") {
+      val v = VersionedStore.publish(spark, base(tag)) { v =>
+        val d = source.cache()
+        stageShared(tag, v, stage(v, d), d.select(col(idCol)).distinct(),
+          buckets)
+        d.unpersist()
+      }
+      register(spark, tag, v, buckets)
+    }
+
+  private def stageShared(tag: String, v: Long, post: DataFrame,
+      ids: DataFrame, buckets: Int): Unit = {
+    val id = ids.columns.head
+    stageBucketed(post, dir(tag, "post", v), bucketCol, buckets)
+    stagePlain(post.select((id +: tombExtra).map(col) :+
+      col("gen").as("upto_gen"): _*).limit(0), dir(tag, "tomb", v))
+    stageIds(ids, dir(tag, "ids", v), id)
+  }
+
+  /** The stored id column: the known-ids table's one column. */
+  private def storedId(spark: SparkSession, tag: String): String =
+    knownIds(spark, tag).columns.head
+
+  /** The postings through their tombstones — merge-on-read. A row
+    * serves unless a tombstone covers its generation, so a re-add
+    * (higher gen) serves while the retracted rows stay suppressed until
+    * compaction drops them. The tombstone side is broadcast: its volume
+    * is deletes since the last compaction, and [[delete]] enforces the
+    * bound. The postings keep their bucketed layout, no extra shuffle. */
+  def live(spark: SparkSession, tag: String): DataFrame = {
+    val id = storedId(spark, tag)
+    val tomb = spark.table(table(tag, "tomb"))
+      .groupBy(id).agg(max("upto_gen").as("upto_gen"))
+    spark.table(table(tag, "post"))
+      .join(broadcast(tomb), Seq(id), "left_outer")
+      .filter(col("upto_gen").isNull || col("gen") > col("upto_gen"))
+      .drop("upto_gen")
+  }
+
+  /** Highest generation any tombstone covers (0 without tombstones) —
+    * a generation floor, bounded by the auto-compaction cap. */
+  def tombMax(spark: SparkSession, tag: String): Long =
+    spark.table(table(tag, "tomb"))
+      .agg(coalesce(max("upto_gen"), lit(0L))).collect().head.getLong(0)
+
+  /** Retract the docs whose `idCol` appears in `ids`: one tombstone per
+    * currently-live doc at its max live generation (plus `tombExtra`),
+    * so ids absent from the index or already tombstoned produce no row
+    * and a double delete is a no-op. The doomed set is pinned with a
+    * localCheckpoint (it is computed from the tombstones about to grow),
+    * appended under the writer lock, and `compact` runs AFTER the
+    * release when the table exceeds `maxTombstones` (the lock is not
+    * re-entrant, and compaction takes its own hold). */
+  def delete(spark: SparkSession, tag: String, ids: DataFrame, idCol: String,
+      maxTombstones: Long)(compact: => Unit): Unit = {
+    requireOpen(spark, tag)
+    val id = storedId(spark, tag)
+    val aggs = tombExtra.map(c => max(c).as(c)) :+ max("gen").as("upto_gen")
+    val doomed = live(spark, tag)
+      .join(ids.select(col(idCol).as(id)).distinct(), Seq(id))
+      .groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
+      .localCheckpoint()
+    val needCompact = doomed.limit(1).count() > 0 && withLock(spark, tag) {
+      doomed.write.mode("append").format("parquet")
+        .saveAsTable(table(tag, "tomb"))
+      spark.catalog.refreshTable(table(tag, "tomb"))
+      spark.table(table(tag, "tomb")).count() > maxTombstones
+    }
+    if (needCompact) compact
+  }
+
+  /** Delete-then-append on the business key — the index twin of the
+    * reference's M1 upsert (database.py): docs already live are
+    * tombstoned at their current generation, then `append` lands the
+    * batch at the next one. */
+  def upsert(spark: SparkSession, tag: String, batch: DataFrame,
+      idCol: String, compact: => Unit)(append: DataFrame => Unit): Unit = {
+    val b = batch.cache()
+    delete(spark, tag, b, idCol, DefaultMaxTombstones)(compact)
+    append(b)
+    b.unpersist()
+  }
+
+  /** Append postings in place, same bucket spec, and invalidate the
+    * cached listing in every session sharing the catalog (a
+    * foreachBatch append runs in a session clone). */
+  def appendPostings(spark: SparkSession, tag: String, post: DataFrame,
+      buckets: Int): Unit = {
+    post.write.mode("append").bucketBy(buckets, bucketCol).sortBy(bucketCol)
+      .format("parquet").saveAsTable(table(tag, "post"))
+    spark.catalog.refreshTable(table(tag, "post"))
+  }
+
+  /** Append a batch's ids (one column, the stored id) to the known-ids
+    * list — after the postings, so a crash between the two leaves ids
+    * MISSING entries only, which [[repairKnownIds]] restates. */
+  def appendIds(spark: SparkSession, tag: String, ids: DataFrame): Unit = {
+    ids.distinct().write.mode("append").format("parquet")
+      .saveAsTable(table(tag, "ids"))
+    spark.catalog.refreshTable(table(tag, "ids"))
+  }
+
+  /** The known-ids frame the ingest guard anti-joins against — the
+    * compact id list, never the postings. */
+  def knownIds(spark: SparkSession, tag: String): DataFrame =
+    spark.table(table(tag, "ids"))
+
+  /** Restate the known-ids list if an append crashed between its
+    * postings and ids writes. The restated list is the UNION of the
+    * postings ids and the surviving list, not a replacement: ids is
+    * legitimately a superset of the postings ids (a doc shorter than
+    * every indexed phrase length, or a vector batch assigned against an
+    * empty centroid set, has zero postings but counts as ingested), and
+    * forgetting it would let a redelivery re-ingest it. One distinct
+    * over the postings, run on recovery.
+    * Returns true when a repair was needed. */
+  def repairKnownIds(spark: SparkSession, tag: String): Boolean = {
+    val id = storedId(spark, tag)
+    val surviving = knownIds(spark, tag)
+    val truth = spark.table(table(tag, "post")).select(id)
+      .unionByName(surviving).distinct().localCheckpoint()
+    val drifted = truth.count() > surviving.distinct().count()
+    if (drifted) {
+      stageIds(truth, dir(tag, "ids", version(spark, tag)), id)
+      spark.catalog.refreshTable(table(tag, "ids"))
+    }
+    drifted
+  }
+
+  /** The redelivery guard, the foreachBatch body of a live-indexing
+    * stream: drop intra-batch duplicates (an at-least-once producer can
+    * retry inside one micro-batch) and every id the index has EVER held —
+    * tombstoned ones too, so a redelivered insert never resurrects a
+    * deleted doc (a re-add is an upsert) — then `append` the rest. The
+    * known set is the compact id list, so the guard costs ∝ index
+    * cardinality, never a postings scan. localCheckpoint, not cache: the
+    * append mutates the id table the anti-join reads, and a lazy plan
+    * would re-read the post-append listing and drop the batch's own
+    * rows. */
+  def ingestNew(spark: SparkSession, tag: String, batch: DataFrame,
+      idCol: String)(append: DataFrame => Unit): Unit = {
+    val known = knownIds(spark, tag).select(col(storedId(spark, tag)).as(idCol))
+    val fresh = batch.dropDuplicates(Seq(idCol))
+      .join(known, Seq(idCol), "left_anti")
+      .localCheckpoint()
+    if (fresh.limit(1).count() > 0) append(fresh)
+  }
+
+  /** The STAGE half of compaction: version N+1's members in fresh
+    * directories, nothing committed (the crash seam). `stage(v, snap)`
+    * gets the live postings pinned and repartitioned ON the bucket
+    * column into exactly `buckets` tasks — the shuffle hash and the
+    * bucket hash are the same murmur3 pmod, so each task writes ONE
+    * file and the small append files really merge — writes the family's
+    * members and returns the postings to stage. Returns N+1. */
+  def compactStage(spark: SparkSession, tag: String, buckets: Int)(
+      stage: (Long, DataFrame) => DataFrame): Long = {
+    val v = version(spark, tag) + 1
+    val post = stage(v, live(spark, tag).localCheckpoint()
+      .repartition(buckets, col(bucketCol)))
+    stageShared(tag, v, post, post.select(storedId(spark, tag)).distinct(),
+      buckets)
+    v
+  }
+
+  /** The COMMIT half: one marker create, re-register, then drop every
+    * older version (markers first, then data). */
+  def commit(spark: SparkSession, tag: String, v: Long, buckets: Int): Unit = {
+    VersionedStore.commitVersion(spark, base(tag), v)
+    register(spark, tag, v, buckets)
+    VersionedStore.retainFrom(spark, base(tag), v)
+  }
+
+  /** Atomic compaction under the writer lock (two compactions would race
+    * the same staged directory; the second fails fast). `stage` is the
+    * family's [[compactStage]] call. Returns (filesBefore, filesAfter)
+    * of the postings. */
+  def compact(spark: SparkSession, tag: String, buckets: Int)(
+      stage: => Long): (Int, Int) = {
+    val before = postFiles(spark, tag)
+    withLock(spark, tag)(commit(spark, tag, stage, buckets))
+    (before, postFiles(spark, tag))
+  }
+
+  private def postFiles(spark: SparkSession, tag: String): Int = {
+    val loc = new Path(dir(tag, "post", version(spark, tag)))
+    fs(spark, loc.toString).listStatus(loc)
+      .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+  }
+}
+
+/** Staging and registration helpers, and ANN's write-ahead generation
+  * claims. */
 object IndexStore {
+
+  /** Default tombstone-count bound: the tombstone max-gen table is
+    * BROADCAST at serve time, so its size is a hard serving constraint —
+    * 1M (id, upto_gen) rows is ~24 MB, inside Spark's broadcast comfort
+    * zone. Every family's delete ENFORCES it by auto-compacting (a
+    * docstring contract alone let a delete-heavy deployment silently
+    * degrade to broadcasting millions of rows). */
+  val DefaultMaxTombstones = 1000000L
 
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -96,11 +363,10 @@ object IndexStore {
     * the directory keeps working. */
   def stageIds(df: DataFrame, location: String, idCol: String,
       parts: Int = 32): Unit =
-    df.repartition(parts, org.apache.spark.sql.functions.col(idCol))
-      .write.mode("overwrite").parquet(location)
+    df.repartition(parts, col(idCol)).write.mode("overwrite").parquet(location)
 
   // ------------------------------------------------------------------
-  // Write-ahead generation claims
+  // Write-ahead generation claims (ANN)
   //
   // The generation counter of a served index must never hand out a
   // number ≤ any generation already on disk (a tombstone at upto_gen G

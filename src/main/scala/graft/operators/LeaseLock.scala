@@ -9,9 +9,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * operator manually deleting the file. A lease makes recovery
   * unattended:
   *
-  *  - ACQUIRE is still one atomic `createNewFile` — zero coordination
-  *    in the common case; the winner then stamps owner pid@host +
-  *    epoch + a per-acquisition FENCING TOKEN (uuid) into the file.
+  *  - ACQUIRE is one exclusive create (`overwrite = false`) that
+  *    writes the owner stamp — pid@host + epoch + a per-acquisition
+  *    FENCING TOKEN (uuid) — and closes: one file create per lease,
+  *    zero coordination in the common case.
   *  - LIVENESS is the lock file's modification time: while the holder
   *    runs, a daemon heartbeat re-touches the file every ttl/4, so a
   *    long build/compaction never looks stale no matter how long it
@@ -99,20 +100,37 @@ object LeaseLock {
     if (l != null) l.checkOwned()
   }
 
-  private def createExclusive(f: FileSystem, lock: Path): Boolean =
-    try f.createNewFile(lock) catch { case _: java.io.IOException => false }
-
   /** Owner stamp: diagnostics (pid@host, epoch) plus the fencing
-    * token. Rewriting the file also refreshes its mtime, which is why
-    * the heartbeat can fall back to a re-stamp where setTimes is
-    * unsupported. */
-  private def stamp(f: FileSystem, lock: Path, token: String): Unit = {
-    val o = f.create(lock, true)
-    o.write((s"owner=${ProcessHandle.current().pid()}@" +
+    * token. */
+  private def stampBytes(token: String): Array[Byte] =
+    (s"owner=${ProcessHandle.current().pid()}@" +
       s"${java.net.InetAddress.getLocalHost.getHostName} " +
       s"epoch_ms=${System.currentTimeMillis()}\n" +
-      s"token=$token\n").getBytes("UTF-8"))
+      s"token=$token\n").getBytes("UTF-8")
+
+  /** Re-stamp a held lock in place. Rewriting the file also refreshes
+    * its mtime, which is why the heartbeat falls back to it where
+    * setTimes is unsupported. */
+  private def stamp(f: FileSystem, lock: Path, token: String): Unit = {
+    val o = f.create(lock, true)
+    o.write(stampBytes(token))
     o.close()
+  }
+
+  /** The acquire: one exclusive create that writes the stamp and
+    * closes. An IOException from the create means another writer holds
+    * the file (the lease is lost); a failed stamp write deletes the
+    * lock before rethrowing — never hold an unstamped lock. */
+  private def createStamped(f: FileSystem, lock: Path,
+      token: String): Boolean = {
+    val o = try f.create(lock, false)
+      catch { case _: java.io.IOException => return false }
+    try { o.write(stampBytes(token)); o.close() }
+    catch { case t: Throwable =>
+      try f.delete(lock, false) catch { case _: Throwable => () }
+      throw t
+    }
+    true
   }
 
   private def readToken(f: FileSystem, lock: Path): Option[String] =
@@ -132,16 +150,7 @@ object LeaseLock {
   private def acquire(f: FileSystem, lock: Path, what: String,
       ttlMs: Long): Lease = {
     val token = java.util.UUID.randomUUID().toString
-    def won(): Boolean =
-      if (createExclusive(f, lock)) {
-        try stamp(f, lock, token)
-        catch { case t: Throwable => // never hold an unstamped lock
-          try f.delete(lock, false) catch { case _: Throwable => () }
-          throw t
-        }
-        true
-      } else false
-    if (won()) return new Lease(f, lock, what, token)
+    if (createStamped(f, lock, token)) return new Lease(f, lock, what, token)
     val ageMs =
       try System.currentTimeMillis() -
         f.getFileStatus(lock).getModificationTime
@@ -153,7 +162,7 @@ object LeaseLock {
         catch { case _: Throwable => false }
       if (wonRename) f.delete(grave, false)
     }
-    if (won()) return new Lease(f, lock, what, token)
+    if (createStamped(f, lock, token)) return new Lease(f, lock, what, token)
     throw new IllegalStateException(
       s"$what is locked by a live writer (lease age ${ageMs} ms <= " +
         s"ttl $ttlMs ms); a crashed holder's lease expires unattended " +

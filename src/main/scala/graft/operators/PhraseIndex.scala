@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.sources.VersionedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,16 +26,12 @@ import org.apache.spark.sql.functions._
   * (DatabaseConverter/api_clients.py:677-728); here the index IS ours,
   * so the maintenance cycle comes with it.
   *
-  * Maintenance mirrors the BM25 index 1:1 on the same [[IndexStore]]
-  * versioned layout: generation-stamped appends ([[appendToPhraseIndex]]),
-  * tombstone retraction with an ENFORCED broadcast bound
-  * ([[deleteFromPhraseIndex]] auto-compacts past the cap), upsert =
-  * tombstone-then-append, and ATOMIC compaction (stage version N+1,
-  * commit with one marker create, version N untouched until after the
-  * commit).
-  * The only structural difference from BM25: no corpus-stats row is
-  * needed for ranking (occurrence count is per-doc), so the 1-row meta
-  * table carries just the append generation and the indexed lengths.
+  * Maintenance is the shared [[IndexStore]] lifecycle:
+  * generation-stamped appends, tombstones with an enforced broadcast
+  * bound, upsert = tombstone-then-append, atomic compaction. Ranking
+  * needs no corpus statistics (occurrence count is per-doc), so the
+  * 1-row `meta` member carries just the append generation and the
+  * indexed lengths.
   *
   * Storage cost: Σ_n (tokens − n + 1) window rows before per-doc
   * aggregation — the standard positional-index multiple of the text. At
@@ -46,12 +41,7 @@ import org.apache.spark.sql.functions._
   */
 object PhraseIndex {
 
-  private def postTable(tag: String) = s"g_phr_post_$tag"
-  private def metaTable(tag: String) = s"g_phr_meta_$tag"
-  private def tombTable(tag: String) = s"g_phr_tomb_$tag"
-  private def idsTable(tag: String) = s"g_phr_ids_$tag"
-  private def indexBase(tag: String) =
-    s"${graft.sources.Bucketing.processRoot}/phrase_$tag"
+  private val store = new IndexStore("phrase", "phr", "w", Seq("meta"))
 
   /** One posting row per (doc, window-string, length): every n-token
     * window for each n in `lengths`, emitted IN-ROW (transform over
@@ -78,33 +68,10 @@ object PhraseIndex {
         min("pos").cast("long").as("first_pos"))
   }
 
-  private def dir(tag: String, table: String, v: Long) =
-    VersionedStore.tableDir(indexBase(tag), table, v)
-
-  private def registerTables(spark: SparkSession, tag: String, v: Long,
-      buckets: Int): Unit = {
-    IndexStore.registerBucketed(spark, postTable(tag), dir(tag, "post", v),
-      "w", buckets)
-    IndexStore.registerParquet(spark, metaTable(tag), dir(tag, "stats", v))
-    IndexStore.registerParquet(spark, tombTable(tag), dir(tag, "tomb", v))
-    IndexStore.registerParquet(spark, idsTable(tag), dir(tag, "ids", v))
-  }
-
-  /** The newest committed version of the index. */
-  private def liveVersion(spark: SparkSession, tag: String): Long =
-    VersionedStore.latest(spark, indexBase(tag)).getOrElse(
-      sys.error(s"phrase index '$tag' has no committed version"))
-
-  /** Recover the catalog entries from the newest committed version — the
-    * fresh-session / post-crash entry point (same contract as
-    * [[Retrieval.openIndex]]). */
-  def openIndex(spark: SparkSession, tag: String, buckets: Int = 8): Unit = {
-    registerTables(spark, tag, liveVersion(spark, tag), buckets)
-    repairKnownIds(spark, tag)
-    // reclaim any version a crashed compaction staged but never committed
-    VersionedStore.gcStaged(spark, indexBase(tag))
-    ()
-  }
+  /** Recover the catalog entries from the newest committed version —
+    * the fresh-session / post-crash entry point ([[IndexStore.open]]). */
+  def openIndex(spark: SparkSession, tag: String, buckets: Int = 8): Unit =
+    store.open(spark, tag, buckets)
 
   private def writeMeta(spark: SparkSession, tag: String, gen: Long,
       lengths: Seq[Int], v: Long): Unit = {
@@ -112,55 +79,34 @@ object PhraseIndex {
     IndexStore.stagePlain(
       Seq((gen, lengths.distinct.sorted.mkString(",")))
         .toDF("gen", "lens"),
-      dir(tag, "stats", v))
+      store.dir(tag, "meta", v))
+  }
+
+  /** Overwrite the live version's meta row in place (appends and the
+    * repair; covered by [[repairMeta]]). */
+  private def rewriteMeta(spark: SparkSession, tag: String, gen: Long,
+      lengths: Seq[Int]): Unit = {
+    writeMeta(spark, tag, gen, lengths, store.version(spark, tag))
+    spark.catalog.refreshTable(store.table(tag, "meta"))
   }
 
   private def readMeta(spark: SparkSession, tag: String): (Long, Seq[Int]) = {
-    val r = spark.table(metaTable(tag)).collect().head
+    val r = spark.table(store.table(tag, "meta")).collect().head
     (r.getLong(0),
       r.getString(1).split(",").filter(_.nonEmpty).map(_.toInt).toSeq)
   }
 
   /** Build the stored phrase index once per (tag, geometry): window
-    * postings for the declared lengths at generation 0, the 1-row meta
-    * table, an empty tombstone table — staged as one version, committed
-    * with one marker create. The ONLY place the corpus is read. */
+    * postings for the declared lengths at generation 0 and the 1-row
+    * meta, staged with the lifecycle members as one version. The ONLY
+    * place the corpus is read. */
   def buildPhraseIndex(spark: SparkSession, docs: => DataFrame,
       idCol: String, textCol: String, tag: String, lengths: Seq[Int],
       buckets: Int = 8): Unit =
-    graft.sources.Bucketing.ensureOnce(s"phrase@$tag#$buckets") {
-      val built = VersionedStore.publish(spark, indexBase(tag)) { v =>
-        val d = docs.cache()
-        val post = windowPostings(d, idCol, textCol, lengths)
-          .withColumn("gen", lit(0L))
-        IndexStore.stageBucketed(post, dir(tag, "post", v), "w", buckets)
-        writeMeta(spark, tag, 0L, lengths, v)
-        IndexStore.stagePlain(
-          post.select(col(idCol), col("gen").as("upto_gen")).limit(0),
-          dir(tag, "tomb", v))
-        IndexStore.stagePlain(d.select(col(idCol)).distinct(),
-          dir(tag, "ids", v))
-        d.unpersist()
-      }
-      registerTables(spark, tag, built, buckets)
+    store.build(spark, tag, s"$buckets", buckets, idCol, docs) { (v, d) =>
+      writeMeta(spark, tag, 0L, lengths, v)
+      windowPostings(d, idCol, textCol, lengths).withColumn("gen", lit(0L))
     }
-
-  /** The stored postings through their tombstones — merge-on-read,
-    * identical shape to BM25's: tombstone max-gens broadcast, postings
-    * keep their window-bucketed layout, a doc's rows serve only above
-    * its tombstone generation. */
-  private def livePostings(spark: SparkSession, tag: String,
-      idCol: String): DataFrame = {
-    val post = spark.table(postTable(tag))
-    if (spark.table(tombTable(tag)).isEmpty) post
-    else {
-      val tombMax = spark.table(tombTable(tag)).groupBy(col(idCol))
-        .agg(max("upto_gen").as("tomb_upto"))
-      post.join(broadcast(tombMax), Seq(idCol), "left_outer")
-        .filter(col("tomb_upto").isNull || col("gen") > col("tomb_upto"))
-        .drop("tomb_upto")
-    }
-  }
 
   /** ALL phrase matches per query from the store, un-ranked: one row
     * per (query_id, doc) with the occurrence count and first position.
@@ -180,7 +126,7 @@ object PhraseIndex {
       s"index '$tag' carries lengths $lens; batch needs $missing")
     val pdf = norm.map { case (q, ts) => (q, ts.mkString(" "), ts.length) }
       .toDF("query_id", "phrase", "plen")
-    val post = livePostings(spark, tag, idCol)
+    val post = store.live(spark, tag)
     post
       .join(broadcast(pdf),
         post("w") === pdf("phrase") && post("wlen") === pdf("plen"))
@@ -257,7 +203,7 @@ object PhraseIndex {
           (q, ts.mkString(" "), ts.length,
             ts.take(pref).mkString(" "), pref)
         }.toDF("query_id", "phrase", "plen", "prefix", "preflen")
-        val post = livePostings(spark, tag, idCol)
+        val post = store.live(spark, tag)
         val cand = post
           .join(broadcast(longDf),
             post("w") === longDf("prefix") && post("wlen") === longDf("preflen"))
@@ -295,195 +241,100 @@ object PhraseIndex {
   }
 
   /** Ingest a document batch: append its window postings at the next
-    * generation. Same crash contract as BM25's append — postings land
-    * first, the 1-row meta (gen counter) second; [[repairMeta]]
-    * restates a stale counter from the postings on recovery. Caller
-    * contract: a doc id is appended at most once per live generation
+    * generation. Same crash contract as BM25's append — postings, then
+    * ids, then the 1-row meta (gen counter); [[repairMeta]] restates a
+    * stale counter from the postings on recovery. Caller contract: a
+    * doc id is appended at most once per live generation
     * ([[upsertIntoPhraseIndex]] is the re-add path). */
   def appendToPhraseIndex(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, tag: String,
       buckets: Int = 8): Unit = {
-    require(spark.catalog.tableExists(postTable(tag)),
-      s"phrase index '$tag' must be initialized by buildPhraseIndex first")
+    store.requireOpen(spark, tag)
     // writer lock across the gen derivation + postings/ids/meta writes
     // (racing appenders would share a generation; an append racing a
     // compaction's commit would write into the version being retired)
-    VersionedStore.withWriterLock(spark, indexBase(tag)) {
-    val (gen, lens) = readMeta(spark, tag)
-    // clear the stored counter AND every tombstone — a stale counter
-    // after an append crash must not land a delete→re-add at its own
-    // tombstone's generation (see Retrieval.appendToIndex; tombstones
-    // are bounded by the auto-compact cap, so the max is cheap)
-    val tombMax = spark.table(tombTable(tag))
-      .agg(coalesce(max("upto_gen"), lit(0L))).collect().head.getLong(0)
-    val next = math.max(gen, tombMax) + 1
-    val b = batch.cache()
-    windowPostings(b, idCol, textCol, lens)
-      .withColumn("gen", lit(next))
-      .write.mode("append").bucketBy(buckets, "w").sortBy("w")
-      .format("parquet").saveAsTable(postTable(tag))
-    // compact known-ids ride along (postings → ids → meta; a crash
-    // before this write only leaves ids MISSING entries, restated by
-    // [[repairKnownIds]] on recovery)
-    b.select(col(idCol)).distinct().write.mode("append").format("parquet")
-      .saveAsTable(idsTable(tag))
-    b.unpersist()
-    writeMeta(spark, tag, next, lens, liveVersion(spark, tag))
-    spark.catalog.refreshTable(postTable(tag))
-    spark.catalog.refreshTable(idsTable(tag))
-    spark.catalog.refreshTable(metaTable(tag))
+    store.withLock(spark, tag) {
+      val (gen, lens) = readMeta(spark, tag)
+      // clear the stored counter AND every tombstone — a stale counter
+      // after an append crash must not land a delete→re-add at its own
+      // tombstone's generation (see Retrieval.appendToIndex)
+      val next = math.max(gen, store.tombMax(spark, tag)) + 1
+      val b = batch.cache()
+      store.appendPostings(spark, tag,
+        windowPostings(b, idCol, textCol, lens).withColumn("gen", lit(next)),
+        buckets)
+      store.appendIds(spark, tag, b.select(col(idCol)))
+      b.unpersist()
+      rewriteMeta(spark, tag, next, lens)
     }
   }
 
   /** The known-ids frame the ingest guard anti-joins against — the
     * compact id list, never the (doc × window) postings. */
   private[graft] def knownIds(spark: SparkSession, tag: String): DataFrame =
-    spark.table(idsTable(tag))
+    store.knownIds(spark, tag)
 
-  /** Restate the known-ids list after an append crash (ids can only be
-    * MISSING entries). UNION with the surviving list, not a replacement:
-    * a doc shorter than every indexed window length is in ids with zero
-    * postings rows — legitimately — and a repair that forgot it would
-    * let a redelivery re-ingest it (round-10 ADVICE). One distinct over
-    * the postings, run on recovery ([[openIndex]] calls it). */
-  def repairKnownIds(spark: SparkSession, tag: String): Boolean = {
-    val post = spark.table(postTable(tag))
-    val idCol = post.columns
-      .filterNot(Set("w", "wlen", "n_hits", "first_pos", "gen")).head
-    val surviving = knownIds(spark, tag).select(col(idCol))
-    val truth = post.select(col(idCol)).unionByName(surviving)
-      .distinct().localCheckpoint()
-    val drifted = truth.count() > surviving.distinct().count()
-    if (drifted) {
-      IndexStore.stageIds(truth, dir(tag, "ids", liveVersion(spark, tag)),
-        idCol)
-      spark.catalog.refreshTable(idsTable(tag))
-    }
-    drifted
-  }
+  /** Restate the known-ids list after an append crash
+    * ([[IndexStore.repairKnownIds]]); [[openIndex]] runs it. */
+  def repairKnownIds(spark: SparkSession, tag: String): Boolean =
+    store.repairKnownIds(spark, tag)
 
   /** [[appendToPhraseIndex]] made REDELIVERY-PROOF — the foreachBatch
-    * body for a live phrase-indexing stream, mirroring
-    * Retrieval.ingestNewDocs: drop intra-batch duplicates, drop docs
-    * the index has EVER held (anti-join against the COMPACT id list —
-    * ∝ corpus cardinality, never a window-postings scan; tombstoned
-    * ids stay known until compaction, so a redelivered insert can't
-    * resurrect a deleted doc), append the rest. */
+    * body for a live phrase-indexing stream ([[IndexStore.ingestNew]]). */
   def ingestNewDocs(spark: SparkSession, batch: DataFrame, idCol: String,
-      textCol: String, tag: String, buckets: Int = 8): Unit = {
-    val known = knownIds(spark, tag).select(col(idCol)).distinct()
-    val fresh = batch.dropDuplicates(Seq(idCol))
-      .join(known, Seq(idCol), "left_anti").localCheckpoint()
-    if (fresh.limit(1).count() > 0)
-      appendToPhraseIndex(spark, fresh, idCol, textCol, tag, buckets)
-  }
+      textCol: String, tag: String, buckets: Int = 8): Unit =
+    store.ingestNew(spark, tag, batch, idCol)(
+      appendToPhraseIndex(spark, _, idCol, textCol, tag, buckets))
 
   /** Restate the meta generation counter from the stored truth (max
     * postings gen ∪ max tombstone gen) after a crash between the two
     * append writes. Returns true when a repair was needed. */
   def repairMeta(spark: SparkSession, tag: String): Boolean = {
-    val maxPost = spark.table(postTable(tag))
+    val maxPost = spark.table(store.table(tag, "post"))
       .agg(coalesce(max("gen"), lit(0L))).collect().head.getLong(0)
-    val maxTomb = spark.table(tombTable(tag))
-      .agg(coalesce(max("upto_gen"), lit(0L))).collect().head.getLong(0)
-    val want = math.max(maxPost, maxTomb)
+    val want = math.max(maxPost, store.tombMax(spark, tag))
     val (cur, lens) = readMeta(spark, tag)
     val drifted = cur != want
-    if (drifted) {
-      writeMeta(spark, tag, want, lens, liveVersion(spark, tag))
-      spark.catalog.refreshTable(metaTable(tag))
-    }
+    if (drifted) rewriteMeta(spark, tag, want, lens)
     drifted
   }
 
-  /** Retract docs: one tombstone (id, upto_gen) per currently-live doc;
-    * double deletes are no-ops. Auto-compacts when the tombstone table
-    * outgrows `maxTombstones` — the serve-time broadcast bound is
-    * enforced, not advisory. */
+  /** Retract docs: one tombstone (id, upto_gen) per currently-live doc
+    * ([[IndexStore.delete]]); double deletes are no-ops, and the table
+    * auto-compacts past `maxTombstones`. */
   def deleteFromPhraseIndex(spark: SparkSession, ids: DataFrame,
       idCol: String, tag: String,
-      maxTombstones: Long = Retrieval.DefaultMaxTombstones,
-      buckets: Int = 8): Unit = {
-    require(spark.catalog.tableExists(postTable(tag)),
-      s"phrase index '$tag' must be initialized by buildPhraseIndex first")
-    val doomed = livePostings(spark, tag, idCol)
-      .join(ids.select(col(idCol)).distinct(), Seq(idCol))
-      .groupBy(col(idCol))
-      .agg(max("gen").as("upto_gen"))
-      .localCheckpoint()
-    // tombstone write under the writer lock; auto-compaction AFTER
-    // release (withWriterLock is not re-entrant and compactPhraseIndex
-    // takes its own hold)
-    val needCompact = doomed.limit(1).count() > 0 &&
-      VersionedStore.withWriterLock(spark, indexBase(tag)) {
-        doomed.write.mode("append").format("parquet")
-          .saveAsTable(tombTable(tag))
-        spark.catalog.refreshTable(tombTable(tag))
-        spark.table(tombTable(tag)).count() > maxTombstones
-      }
-    if (needCompact) compactPhraseIndex(spark, tag, idCol, buckets)
-  }
+      maxTombstones: Long = IndexStore.DefaultMaxTombstones,
+      buckets: Int = 8): Unit =
+    store.delete(spark, tag, ids, idCol, maxTombstones)(
+      compactPhraseIndex(spark, tag, idCol, buckets))
 
   /** Delete-then-append on the doc id — the phrase-index half of an
     * upsert (run it alongside [[Retrieval.upsertIntoIndex]] to keep a
     * BM25+phrase tier consistent). */
   def upsertIntoPhraseIndex(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, tag: String,
-      buckets: Int = 8): Unit = {
-    val b = batch.cache()
-    deleteFromPhraseIndex(spark, b.select(col(idCol)), idCol, tag,
-      buckets = buckets)
-    appendToPhraseIndex(spark, b, idCol, textCol, tag, buckets)
-    b.unpersist()
-  }
+      buckets: Int = 8): Unit =
+    store.upsert(spark, tag, batch, idCol,
+      compactPhraseIndex(spark, tag, idCol, buckets))(
+      appendToPhraseIndex(spark, _, idCol, textCol, tag, buckets))
 
-  /** Atomic compaction: stage version N+1 (live postings with tombstones
-    * folded in, meta, empty tombstones), commit with one marker create,
-    * re-point the catalog, drop version N. Crash before the marker → N
-    * serves untouched via [[openIndex]]. Returns (filesBefore,
+  /** Atomic compaction ([[IndexStore.compact]]): tombstones folded into
+    * version N+1's postings, meta carried over. Returns (filesBefore,
     * filesAfter) for the postings store. */
   def compactPhraseIndex(spark: SparkSession, tag: String, idCol: String,
-      buckets: Int = 8): (Int, Int) = {
-    val before = parquetFileCount(spark, tag)
-    // writer lock: two concurrent compactions would race the same
-    // staged version directory — the second fails fast
-    VersionedStore.withWriterLock(spark, indexBase(tag)) {
-      val next = compactStage(spark, tag, idCol, buckets)
-      compactCommit(spark, tag, next, buckets)
-    }
-    (before, parquetFileCount(spark, tag))
-  }
-
-  private def parquetFileCount(spark: SparkSession, tag: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val loc = new Path(dir(tag, "post", liveVersion(spark, tag)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(loc)
-      .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-  }
+      buckets: Int = 8): (Int, Int) =
+    store.compact(spark, tag, buckets)(compactStage(spark, tag, idCol, buckets))
 
   private[graft] def compactStage(spark: SparkSession, tag: String,
-      idCol: String, buckets: Int): Long = {
-    val next = liveVersion(spark, tag) + 1
-    val (gen, lens) = readMeta(spark, tag)
-    // same one-task-per-bucket rewrite as Retrieval.compactStage: the
-    // shuffle hash IS the bucket hash, so `buckets` tasks → `buckets`
-    // files, a real small-file merge
-    val postSnap = livePostings(spark, tag, idCol).localCheckpoint()
-      .repartition(buckets, col("w"))
-    IndexStore.stageBucketed(postSnap, dir(tag, "post", next), "w", buckets)
-    writeMeta(spark, tag, gen, lens, next)
-    IndexStore.stagePlain(spark.table(tombTable(tag)).limit(0),
-      dir(tag, "tomb", next))
-    IndexStore.stagePlain(postSnap.select(col(idCol)).distinct(),
-      dir(tag, "ids", next))
-    next
-  }
+      idCol: String, buckets: Int): Long =
+    store.compactStage(spark, tag, buckets) { (v, post) =>
+      val (gen, lens) = readMeta(spark, tag)
+      writeMeta(spark, tag, gen, lens, v)
+      post
+    }
 
   private[graft] def compactCommit(spark: SparkSession, tag: String,
-      v: Long, buckets: Int): Unit = {
-    VersionedStore.commitVersion(spark, indexBase(tag), v)
-    registerTables(spark, tag, v, buckets)
-    VersionedStore.retainFrom(spark, indexBase(tag), v)
-  }
+      v: Long, buckets: Int): Unit =
+    store.commit(spark, tag, v, buckets)
 }

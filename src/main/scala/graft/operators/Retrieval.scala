@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.sources.VersionedStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -230,129 +229,56 @@ object Retrieval {
     serveIndex(spark, idCol, queries, k, tag)
   }
 
-  private def postTable(tag: String) = s"g_bm25_post_$tag"
-  private def statsTable(tag: String) = s"g_bm25_stats_$tag"
-  private def tombTable(tag: String) = s"g_bm25_tomb_$tag"
-  private def idsTable(tag: String) = s"g_bm25_ids_$tag"
-  private def indexBase(tag: String) =
-    s"${graft.sources.Bucketing.processRoot}/bm25_$tag"
-
-  /** Default tombstone-count bound: the tombstone max-gen table is
-    * BROADCAST at serve time ([[liveIndex]]), so its size is a hard
-    * serving constraint, not a taste — 1M (id, dl, upto_gen) rows is
-    * ~24 MB, inside Spark's broadcast comfort zone. [[deleteFromIndex]]
-    * ENFORCES the bound by auto-compacting when a delete pushes the
-    * table past it (round-8 verdict: the docstring contract alone let a
-    * delete-heavy deployment silently degrade to broadcasting millions
-    * of rows). */
-  val DefaultMaxTombstones = 1000000L
-
-  private def dir(tag: String, table: String, v: Long) =
-    VersionedStore.tableDir(indexBase(tag), table, v)
-
-  /** (Re)register the index's tables over version `v`'s directories —
-    * derivable state, also the recovery path a fresh session takes via
-    * [[openIndex]]. */
-  private def registerTables(spark: org.apache.spark.sql.SparkSession,
-      tag: String, v: Long, buckets: Int): Unit = {
-    IndexStore.registerBucketed(spark, postTable(tag), dir(tag, "post", v),
-      "term", buckets)
-    IndexStore.registerParquet(spark, statsTable(tag), dir(tag, "stats", v))
-    IndexStore.registerParquet(spark, tombTable(tag), dir(tag, "tomb", v))
-    IndexStore.registerParquet(spark, idsTable(tag), dir(tag, "ids", v))
-  }
-
-  /** The newest committed version of the index. */
-  private def liveVersion(spark: org.apache.spark.sql.SparkSession,
-      tag: String): Long =
-    VersionedStore.latest(spark, indexBase(tag)).getOrElse(
-      sys.error(s"index '$tag' has no committed version at ${indexBase(tag)}"))
+  /** The stored index's lifecycle ([[IndexStore]]): term-bucketed
+    * postings (id, term, tf, dl, gen), tombstones carrying the doc's
+    * `dl` for the stats correction, and the 1-row `stats` member
+    * (n_docs, sum_dl, gen) — the corpus statistics plus the in-place
+    * generation counter. */
+  private val store = new IndexStore("bm25", "bm25", "term", Seq("stats"),
+    tombExtra = Seq("dl"))
 
   /** Open an index built by a PREVIOUS session (or recover after a
-    * crash): re-derive the catalog entries from the newest committed
-    * version's directories. The marker files are the only durable truth —
-    * a crash mid-compaction leaves the old marker newest, so this
-    * serves the old, complete index. */
+    * crash) from the newest committed version ([[IndexStore.open]]). */
   def openIndex(spark: org.apache.spark.sql.SparkSession, tag: String,
-      buckets: Int = 8): Unit = {
-    registerTables(spark, tag, liveVersion(spark, tag), buckets)
-    repairKnownIds(spark, tag)
-    // reclaim any version a crashed compaction staged but never committed
-    VersionedStore.gcStaged(spark, indexBase(tag))
-    ()
-  }
+      buckets: Int = 8): Unit =
+    store.open(spark, tag, buckets)
 
   /** Build the stored index once per (tag, geometry): term-bucketed
-    * postings stamped with generation 0, the 1-row stats table
-    * (n_docs, sum_dl, gen), and an empty tombstone table — all staged
-    * as one version and committed with one marker create
-    * ([[VersionedStore.publish]]). The ONLY place the corpus is read — one forced
-    * pass feeds both stored tables. */
+    * postings stamped with generation 0 and the 1-row stats table
+    * (n_docs, sum_dl, gen), staged with the lifecycle members as one
+    * version. The ONLY place the corpus is read — one forced pass feeds
+    * every stored table. */
   def buildIndex(spark: org.apache.spark.sql.SparkSession,
       docs: => DataFrame, idCol: String, textCol: String, tag: String,
       buckets: Int = 8): Unit =
-    graft.sources.Bucketing.ensureOnce(s"bm25@$tag#$buckets") {
-      val built = VersionedStore.publish(spark, indexBase(tag)) { v =>
-        val d = docs.cache()
-        val post = postings(d, idCol, textCol).withColumn("gen", lit(0L))
-        IndexStore.stageBucketed(post, dir(tag, "post", v), "term", buckets)
-        IndexStore.stagePlain(
-          corpusStats(d, textCol).withColumn("gen", lit(0L)),
-          dir(tag, "stats", v))
-        IndexStore.stagePlain(
-          post.select(col(idCol), col("dl"), col("gen").as("upto_gen"))
-            .limit(0),
-          dir(tag, "tomb", v))
-        IndexStore.stagePlain(d.select(col(idCol)).distinct(),
-          dir(tag, "ids", v))
-        d.unpersist()
-      }
-      registerTables(spark, tag, built, buckets)
+    store.build(spark, tag, s"$buckets", buckets, idCol, docs) { (v, d) =>
+      IndexStore.stagePlain(
+        corpusStats(d, textCol).withColumn("gen", lit(0L)),
+        store.dir(tag, "stats", v))
+      postings(d, idCol, textCol).withColumn("gen", lit(0L))
     }
 
-  /** The stored index through its tombstones — the merge-on-read view.
-    * Postings rows carry the generation that appended them; a tombstone
-    * (id, dl, upto_gen) retracts the doc's postings UP TO that
-    * generation, so a later re-add (higher gen) serves while the old
-    * rows stay suppressed until [[compactIndex]] drops them physically.
-    * The tombstone side is broadcast — its volume is bounded by deletes
-    * since the last compaction, and the bound is ENFORCED:
-    * [[deleteFromIndex]] auto-compacts past [[DefaultMaxTombstones]] —
-    * so the postings side keeps its term-bucketed layout with no extra
-    * shuffle. Stats are the stored row minus the tombstoned docs'
-    * counts — the same integers a rebuild over the surviving corpus
-    * would compute, which is what makes serve-after-delete hash-exact
-    * against rebuild-without-doc. */
+  /** The stored index through its tombstones ([[IndexStore.live]]), with
+    * stats restated as the stored row minus the tombstoned docs' counts
+    * — the same integers a rebuild over the surviving corpus would
+    * compute, which is what makes serve-after-delete hash-exact against
+    * rebuild-without-doc. */
   private def liveIndex(spark: org.apache.spark.sql.SparkSession,
-      tag: String, idCol: String): (DataFrame, DataFrame) = {
-    val post = spark.table(postTable(tag))
-    val stats = spark.table(statsTable(tag)).select("n_docs", "sum_dl")
-    // fast path: a never-deleted (or freshly compacted) index skips the
-    // tombstone joins entirely — isEmpty on an empty 1-file parquet
-    // table is a footer read, not a scan
-    if (!spark.catalog.tableExists(tombTable(tag)) ||
-        spark.table(tombTable(tag)).isEmpty) (post, stats)
-    else {
-      val tomb = spark.table(tombTable(tag))
-      val tombMax = tomb.groupBy(col(idCol))
-        .agg(max("upto_gen").as("tomb_upto"))
-      val live = post.join(broadcast(tombMax), Seq(idCol), "left_outer")
-        .filter(col("tomb_upto").isNull || col("gen") > col("tomb_upto"))
-        .drop("tomb_upto")
-      val tombAgg = tomb.agg(count(lit(1)).as("t_n"),
-        coalesce(sum("dl"), lit(0L)).as("t_dl"))
-      val liveStats = stats.crossJoin(broadcast(tombAgg))
-        .select((col("n_docs") - col("t_n")).as("n_docs"),
-          (col("sum_dl") - col("t_dl")).as("sum_dl"))
-      (live, liveStats)
-    }
+      tag: String): (DataFrame, DataFrame) = {
+    val tombAgg = spark.table(store.table(tag, "tomb"))
+      .agg(count(lit(1)).as("t_n"), coalesce(sum("dl"), lit(0L)).as("t_dl"))
+    val liveStats = spark.table(store.table(tag, "stats"))
+      .crossJoin(broadcast(tombAgg))
+      .select((col("n_docs") - col("t_n")).as("n_docs"),
+        (col("sum_dl") - col("t_dl")).as("sum_dl"))
+    (store.live(spark, tag), liveStats)
   }
 
   /** Serve a query batch purely from the stored index (tombstones
     * applied) — never touches document text. */
   def serveIndex(spark: org.apache.spark.sql.SparkSession, idCol: String,
       queries: Seq[(Long, Seq[String])], k: Int, tag: String): DataFrame = {
-    val (post, stats) = liveIndex(spark, tag, idCol)
+    val (post, stats) = liveIndex(spark, tag)
     bm25Serve(post, stats, idCol, queries, k)
   }
 
@@ -367,131 +293,66 @@ object Retrieval {
   def serveIndexFiltered(spark: org.apache.spark.sql.SparkSession,
       idCol: String, queries: Seq[(Long, Seq[String])], k: Int,
       tag: String, allowedIds: DataFrame): DataFrame = {
-    val (post, stats) = liveIndex(spark, tag, idCol)
+    val (post, stats) = liveIndex(spark, tag)
     bm25Serve(post, stats, idCol, queries, k, allowGlobal =
       Some(allowedIds.select(col(allowedIds.columns.head).as(idCol))))
   }
 
   /** Retract documents from the stored index WITHOUT rewriting it: one
-    * tombstone row (id, dl, upto_gen) per doc that is currently live.
-    * Ids absent from the index — or already fully tombstoned — produce
-    * no row, so deleting twice never double-subtracts the stats.
-    * Serving reflects the delete immediately ([[liveIndex]]); the
+    * tombstone row (id, dl, upto_gen) per doc that is currently live
+    * ([[IndexStore.delete]]); serving reflects it immediately, and the
     * physical rows go away at the next [[compactIndex]] — which this
-    * triggers ITSELF when the accumulated tombstones exceed
-    * `maxTombstones`, keeping the serve-time broadcast bounded by
-    * construction instead of by operator discipline. */
+    * triggers itself past `maxTombstones`. */
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, idCol: String, tag: String,
-      maxTombstones: Long = DefaultMaxTombstones,
-      buckets: Int = 8): Unit = {
-    require(spark.catalog.tableExists(postTable(tag)),
-      s"index '$tag' must be initialized by buildIndex first")
-    val (livePost, _) = liveIndex(spark, tag, idCol)
-    // localCheckpoint pins the pre-delete snapshot: the doomed set is
-    // computed FROM the tombstone view we are about to append to
-    val doomed = livePost.join(ids.select(col(idCol)).distinct(), Seq(idCol))
-      .groupBy(col(idCol))
-      .agg(max("dl").as("dl"), max("gen").as("upto_gen"))
-      .localCheckpoint()
-    // tombstone write under the writer lock; auto-compaction AFTER
-    // release (withWriterLock is not re-entrant and compactIndex takes
-    // its own hold)
-    val needCompact = doomed.limit(1).count() > 0 &&
-      VersionedStore.withWriterLock(spark, indexBase(tag)) {
-        doomed.write.mode("append").format("parquet")
-          .saveAsTable(tombTable(tag))
-        spark.catalog.refreshTable(tombTable(tag))
-        spark.table(tombTable(tag)).count() > maxTombstones
-      }
-    if (needCompact) compactIndex(spark, tag, idCol, buckets)
-  }
+      maxTombstones: Long = IndexStore.DefaultMaxTombstones,
+      buckets: Int = 8): Unit =
+    store.delete(spark, tag, ids, idCol, maxTombstones)(
+      compactIndex(spark, tag, idCol, buckets))
 
-  /** Delete-then-append on the business key — the index twin of the
-    * reference's M1 upsert (database.py upsert semantics): docs already
-    * live are tombstoned at their current generation, then the batch
-    * appends at the next generation, so the new postings serve while
-    * the old stay suppressed. Docs not in the index insert cleanly. */
+  /** Delete-then-append on the business key ([[IndexStore.upsert]]):
+    * the new postings serve while the old stay suppressed; docs not in
+    * the index insert cleanly. */
   def upsertIntoIndex(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, idCol: String, textCol: String, tag: String,
-      buckets: Int = 8): Unit = {
-    val b = batch.cache()
-    deleteFromIndex(spark, b.select(col(idCol)), idCol, tag)
-    appendToIndex(spark, b, idCol, textCol, tag, buckets)
-    b.unpersist()
-  }
+      buckets: Int = 8): Unit =
+    store.upsert(spark, tag, batch, idCol,
+      compactIndex(spark, tag, idCol, buckets))(
+      appendToIndex(spark, _, idCol, textCol, tag, buckets))
 
   /** Physically drop tombstoned postings and merge the
-    * append-accumulated small files — ATOMICALLY. The live view
-    * (postings minus tombstones, restated stats, an empty tombstone
-    * table) is staged in full as version N+1's fresh directories, then
-    * committed with [[VersionedStore]]'s single marker create; only then
-    * do the catalog entries move and version N's directories get
-    * dropped. A crash anywhere before the marker leaves N newest and complete
-    * — [[openIndex]] serves it untouched, which the crash-sim unit test
-    * pins by killing exactly between stage and commit. Returns
-    * (filesBefore, filesAfter) for the postings store. */
+    * append-accumulated small files — ATOMICALLY ([[IndexStore.compact]]):
+    * a crash before the marker leaves the old version newest and
+    * complete, which the crash-sim unit test pins by killing exactly
+    * between stage and commit. Returns (filesBefore, filesAfter) for
+    * the postings store. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, tag: String,
-      idCol: String, buckets: Int = 8): (Int, Int) = {
-    val before = parquetFileCount(spark, tag)
-    // writer lock: two concurrent compactions would race the same
-    // staged version directory — the second fails fast
-    VersionedStore.withWriterLock(spark, indexBase(tag)) {
-      val next = compactStage(spark, tag, idCol, buckets)
-      compactCommit(spark, tag, next, buckets)
-    }
-    (before, parquetFileCount(spark, tag))
-  }
+      idCol: String, buckets: Int = 8): (Int, Int) =
+    store.compact(spark, tag, buckets)(compactStage(spark, tag, idCol, buckets))
 
-  private def parquetFileCount(spark: org.apache.spark.sql.SparkSession,
-      tag: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val loc = new Path(dir(tag, "post", liveVersion(spark, tag)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(loc)
-      .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-  }
-
-  /** The STAGE half of compaction: materialize version N+1's postings,
-    * stats, and empty tombstone table without committing. Package-
-    * private so the crash-sim test can stop exactly here and prove the
-    * old version still serves. Returns the staged version number. */
+  /** The STAGE half of compaction: version N+1's postings, restated
+    * stats and lifecycle members, uncommitted — package-private so the
+    * crash-sim test can stop exactly here. Returns the staged version. */
   private[graft] def compactStage(spark: org.apache.spark.sql.SparkSession,
       tag: String, idCol: String, buckets: Int): Long = {
     import spark.implicits._
-    val next = liveVersion(spark, tag) + 1
-    val (livePost, liveStats) = liveIndex(spark, tag, idCol)
-    // repartition ON the bucket column into exactly `buckets` tasks:
-    // Spark's shuffle hash and its bucket hash are the same murmur3
-    // pmod, so each task owns exactly one bucket and writes ONE file —
-    // the compaction actually merges the append-accumulated small
-    // files instead of rewriting their count
-    val postSnap = livePost.localCheckpoint()
-      .repartition(buckets, col("term"))
-    val gen = spark.table(statsTable(tag)).select("gen")
-      .collect().head.getLong(0)
-    val Array(nDocs, sumDl) = liveStats.collect().head
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    IndexStore.stageBucketed(postSnap, dir(tag, "post", next), "term",
-      buckets)
-    IndexStore.stagePlain(
-      Seq((nDocs, sumDl, gen)).toDF("n_docs", "sum_dl", "gen"),
-      dir(tag, "stats", next))
-    IndexStore.stagePlain(spark.table(tombTable(tag)).limit(0),
-      dir(tag, "tomb", next))
-    IndexStore.stagePlain(postSnap.select(col(idCol)).distinct(),
-      dir(tag, "ids", next))
-    next
+    store.compactStage(spark, tag, buckets) { (v, post) =>
+      val gen = spark.table(store.table(tag, "stats")).select("gen")
+        .collect().head.getLong(0)
+      val Array(nDocs, sumDl) = liveIndex(spark, tag)._2.collect().head
+        .toSeq.map(_.asInstanceOf[Long]).toArray
+      IndexStore.stagePlain(
+        Seq((nDocs, sumDl, gen)).toDF("n_docs", "sum_dl", "gen"),
+        store.dir(tag, "stats", v))
+      post
+    }
   }
 
   /** The COMMIT half: one marker create, then re-point the catalog and
     * drop the previous version's directories. */
   private[graft] def compactCommit(spark: org.apache.spark.sql.SparkSession,
-      tag: String, v: Long, buckets: Int): Unit = {
-    VersionedStore.commitVersion(spark, indexBase(tag), v)
-    registerTables(spark, tag, v, buckets)
-    VersionedStore.retainFrom(spark, indexBase(tag), v)
-  }
+      tag: String, v: Long, buckets: Int): Unit =
+    store.commit(spark, tag, v, buckets)
 
   /** Overwrite the 1-row stats table in place (its directory within the
     * LIVE version — new versions are committed only at compaction). The
@@ -502,8 +363,8 @@ object Retrieval {
     import spark.implicits._
     IndexStore.stagePlain(
       Seq((nDocs, sumDl, gen)).toDF("n_docs", "sum_dl", "gen"),
-      dir(tag, "stats", liveVersion(spark, tag)))
-    spark.catalog.refreshTable(statsTable(tag))
+      store.dir(tag, "stats", store.version(spark, tag)))
+    spark.catalog.refreshTable(store.table(tag, "stats"))
   }
 
   /** Recompute the stats row from the live postings — the detect-or-
@@ -516,29 +377,20 @@ object Retrieval {
     * tokenization), so it is safe to run on every recovery. */
   def repairStats(spark: org.apache.spark.sql.SparkSession, tag: String,
       idCol: String): Boolean = {
-    val (livePost, _) = liveIndex(spark, tag, idCol)
-    val truth = livePost.groupBy(col(idCol))
+    val truth = store.live(spark, tag).groupBy(col(idCol))
       .agg(max("dl").as("dl"), max("gen").as("g"))
       .agg(coalesce(count(lit(1)), lit(0L)).as("n"),
         coalesce(sum("dl"), lit(0L)).as("s"),
         coalesce(max("g"), lit(0L)).as("g"))
       .collect().head
-    val (tn, tdl) =
-      if (!spark.catalog.tableExists(tombTable(tag))) (0L, 0L)
-      else {
-        val r = spark.table(tombTable(tag))
-          .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).collect().head
-        (r.getLong(0), r.getLong(1))
-      }
-    val (wantN, wantS, wantG) =
-      (truth.getLong(0) + tn, truth.getLong(1) + tdl, truth.getLong(2))
-    val cur = spark.table(statsTable(tag)).collect().head
+    val tomb = spark.table(store.table(tag, "tomb"))
+      .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).collect().head
+    val (wantN, wantS, wantG) = (truth.getLong(0) + tomb.getLong(0),
+      truth.getLong(1) + tomb.getLong(1), truth.getLong(2))
+    val cur = spark.table(store.table(tag, "stats")).collect().head
     val drifted = cur.getLong(0) != wantN || cur.getLong(1) != wantS ||
       cur.getLong(2) != wantG
-    if (drifted) {
-      writeStats(spark, tag, wantN, wantS, wantG)
-      spark.catalog.refreshTable(statsTable(tag))
-    }
+    if (drifted) writeStats(spark, tag, wantN, wantS, wantG)
     drifted
   }
 
@@ -548,20 +400,16 @@ object Retrieval {
     * counts into the stats row. After this, [[serveIndex]] serves WITH
     * the new docs: df, n_docs, and avgdl all reflect the append, so
     * results equal a full rebuild over the grown corpus (pinned in
-    * OperatorsSpec). Together with [[buildIndex]]/[[deleteFromIndex]]/
-    * [[compactIndex]] this is the index-maintenance cycle a live
-    * search tier runs per ingest batch — tokenize the BATCH, never the
-    * corpus.
+    * OperatorsSpec) — tokenize the BATCH, never the corpus.
     *
-    * CRASH CONTRACT: two non-atomic writes, postings append THEN stats
-    * overwrite — deliberately in that order. A crash between them
-    * leaves postings the stats row does not count: scores are mildly
-    * off (df/avgdl stale) but every doc remains servable, and
+    * CRASH CONTRACT: postings append, then ids, then stats overwrite —
+    * deliberately in that order. A crash before the stats write leaves
+    * postings the stats row does not count: scores are mildly off
+    * (df/avgdl stale) but every doc remains servable, and
     * [[repairStats]] restates the row from the postings on recovery.
     * The reverse order would instead count docs that have no postings —
     * an undetectable phantom (nothing on disk to recompute them from),
-    * which is why stats go last. The stats update itself is a 1-row
-    * driver-side read-modify-write, bounded by construction.
+    * which is why stats go last.
     *
     * Caller contract (same as the dedup store): a doc id is appended at
     * most once per index generation; re-sending a batch double-counts
@@ -569,49 +417,30 @@ object Retrieval {
   def appendToIndex(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, idCol: String, textCol: String, tag: String,
       buckets: Int = 8): Unit = {
-    require(spark.catalog.tableExists(postTable(tag)) &&
-        spark.catalog.tableExists(statsTable(tag)),
-      s"index '$tag' must be initialized by buildIndex first")
+    store.requireOpen(spark, tag)
     // writer lock across the gen derivation + all three writes: a
     // racing second appender would derive the same generation from the
     // same stored counter, and an append racing a compaction's commit
     // would write postings into the version being retired
-    VersionedStore.withWriterLock(spark, indexBase(tag)) {
-    val b = batch.cache()
-    val add = corpusStats(b, textCol).collect().head
-    val cur = spark.table(statsTable(tag)).collect().head
-    // Next generation clears the stored counter AND every tombstone:
-    // after a crash between the postings append and the stats write,
-    // the counter is stale-low — an append trusting it alone would
-    // land a delete→re-add AT its own tombstone's generation and be
-    // suppressed (serving is strictly gen > upto_gen; the AnnIndex
-    // ADVICE scenario, same bug class here). The tombstone table is
-    // bounded by the enforced auto-compact cap, so this max is cheap.
-    // Residual blur: two batches can share a generation across such a
-    // crash (benign — tombstones are per-doc over that doc's own max
-    // live gen); repairStats restores the strict counter on recovery.
-    val tombMax =
-      if (!spark.catalog.tableExists(tombTable(tag))) 0L
-      else spark.table(tombTable(tag))
-        .agg(coalesce(max("upto_gen"), lit(0L))).collect().head.getLong(0)
-    val gen = math.max(cur.getLong(2), tombMax) + 1
-    appendPostings(spark, postings(b, idCol, textCol)
-      .withColumn("gen", lit(gen)), tag, buckets)
-    // the compact known-ids list rides along (between postings and
-    // stats — a crash before this write leaves ids MISSING entries
-    // only, which [[repairKnownIds]] restates on recovery)
-    b.select(col(idCol)).distinct().write.mode("append").format("parquet")
-      .saveAsTable(idsTable(tag))
-    spark.catalog.refreshTable(idsTable(tag))
-    b.unpersist()
-    writeStats(spark, tag, cur.getLong(0) + add.getLong(0),
-      cur.getLong(1) + add.getLong(1), gen)
-    // invalidate cached relations/file listings in EVERY session sharing
-    // the catalog: a foreachBatch append runs in a micro-batch session
-    // clone, and without this the outer session kept serving the
-    // pre-append listing (observed: df from a fraction of the corpus)
-    spark.catalog.refreshTable(postTable(tag))
-    spark.catalog.refreshTable(statsTable(tag))
+    store.withLock(spark, tag) {
+      val b = batch.cache()
+      val add = corpusStats(b, textCol).collect().head
+      val cur = spark.table(store.table(tag, "stats")).collect().head
+      // Next generation clears the stored counter AND every tombstone:
+      // after a crash between the postings append and the stats write,
+      // the counter is stale-low — an append trusting it alone would
+      // land a delete→re-add AT its own tombstone's generation and be
+      // suppressed (serving is strictly gen > upto_gen). Residual blur:
+      // two batches can share a generation across such a crash (benign
+      // — tombstones are per-doc over that doc's own max live gen);
+      // repairStats restores the strict counter on recovery.
+      val gen = math.max(cur.getLong(2), store.tombMax(spark, tag)) + 1
+      appendPostings(spark, postings(b, idCol, textCol)
+        .withColumn("gen", lit(gen)), tag, buckets)
+      store.appendIds(spark, tag, b.select(col(idCol)))
+      b.unpersist()
+      writeStats(spark, tag, cur.getLong(0) + add.getLong(0),
+        cur.getLong(1) + add.getLong(1), gen)
     }
   }
 
@@ -622,9 +451,7 @@ object Retrieval {
   private[graft] def appendPostings(
       spark: org.apache.spark.sql.SparkSession, post: DataFrame,
       tag: String, buckets: Int): Unit =
-    post.write.mode("append")
-      .bucketBy(buckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(postTable(tag))
+    store.appendPostings(spark, tag, post, buckets)
 
   /** RRF constants — Cormack et al. 2009's k=60, and a 1e9 fixed-point
     * scale so every reciprocal is an exact integer division. */
@@ -780,7 +607,7 @@ object Retrieval {
     val allow = PhraseIndex.phraseMatches(spark, idCol,
       queries.map { case (q, _, p) => (q, p) }, phraseTag)
       .select(col("query_id"), col(idCol))
-    val (post, stats) = liveIndex(spark, bm25Tag, idCol)
+    val (post, stats) = liveIndex(spark, bm25Tag)
     bm25Serve(post, stats, idCol,
       queries.map { case (q, ts, _) => (q, ts) }, k, allow = Some(allow))
   }
@@ -804,72 +631,26 @@ object Retrieval {
       WHERE rn <= $k"""
   }
 
-  /** [[appendToIndex]] made REDELIVERY-PROOF: drop duplicates WITHIN
-    * the batch (an at-least-once producer can retry inside one
-    * micro-batch, delivering the same doc twice in a single frame),
-    * then drop docs whose id the index has EVER held (one anti-join
-    * against the stored doc ids — including tombstoned ones, so a
-    * redelivered insert can never resurrect a deliberately deleted doc;
-    * tombstone wins, and an intentional re-add goes through
-    * [[upsertIntoIndex]]), then append the remainder. This is the
-    * foreachBatch body for a live-indexing stream — re-sending a batch
-    * neither double-counts postings nor inflates the stats (the
-    * StreamingSpec twin pins it). Intra-batch copies of one id are
-    * retried deliveries of the SAME document, so which copy survives
-    * dropDuplicates is immaterial. */
+  /** [[appendToIndex]] made REDELIVERY-PROOF ([[IndexStore.ingestNew]]):
+    * re-sending a batch neither double-counts postings nor inflates the
+    * stats (the StreamingSpec twin pins it). */
   def ingestNewDocs(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, idCol: String, textCol: String, tag: String,
-      buckets: Int = 8): Unit = {
-    // the known set is the COMPACT id list maintained alongside the
-    // postings — the guard costs ∝ corpus CARDINALITY per batch, never
-    // a (doc × term) postings scan (round-9 verdict item 3)
-    val known = knownIds(spark, tag).select(col(idCol)).distinct()
-    // localCheckpoint (eager), NOT cache: the anti-join reads the very
-    // table the append below mutates, and a lazily-cached plan re-reads
-    // the POST-append file listing for any partition the guard didn't
-    // materialize — the batch's own rows then look "known" and vanish
-    // mid-ingest (observed as a null stats sum). Truncating the lineage
-    // pins the pre-append snapshot.
-    val fresh = batch.dropDuplicates(Seq(idCol))
-      .join(known, Seq(idCol), "left_anti").localCheckpoint()
-    if (fresh.limit(1).count() > 0)
-      appendToIndex(spark, fresh, idCol, textCol, tag, buckets)
-  }
+      buckets: Int = 8): Unit =
+    store.ingestNew(spark, tag, batch, idCol)(
+      appendToIndex(spark, _, idCol, textCol, tag, buckets))
 
   /** The known-ids frame the ingest guard anti-joins against — the
     * compact id list, never the postings (package-private so the plan
     * test can pin that property). */
   private[graft] def knownIds(spark: org.apache.spark.sql.SparkSession,
-      tag: String): DataFrame = spark.table(idsTable(tag))
+      tag: String): DataFrame = store.knownIds(spark, tag)
 
-  /** Restate the known-ids list if an append crashed between the
-    * postings write and the ids write (ids can only be MISSING entries
-    * — every other path stages them together). The restated list is
-    * the UNION of the postings-derived ids and the surviving list, not
-    * a replacement: ids is legitimately a SUPERSET of the postings ids
-    * — a doc ingested with empty/whitespace text contributes zero
-    * postings but still counts in n_docs, and a repair that forgot it
-    * would let a later redelivery re-ingest it and double-count its
-    * corpus-stats contribution (round-10 ADVICE). One distinct over
-    * the postings, run on recovery ([[openIndex]] calls it). The id
-    * column is recovered from the postings schema (the one column that
-    * isn't term/tf/dl/gen). Returns true when a repair was needed. */
+  /** Restate the known-ids list after an append crash
+    * ([[IndexStore.repairKnownIds]]); [[openIndex]] runs it. Returns
+    * true when a repair was needed. */
   def repairKnownIds(spark: org.apache.spark.sql.SparkSession,
-      tag: String): Boolean = {
-    val post = spark.table(postTable(tag))
-    val idCol = post.columns
-      .filterNot(Set("term", "tf", "dl", "gen")).head
-    val surviving = knownIds(spark, tag).select(col(idCol))
-    val truth = post.select(col(idCol)).unionByName(surviving)
-      .distinct().localCheckpoint()
-    val drifted = truth.count() > surviving.distinct().count()
-    if (drifted) {
-      IndexStore.stageIds(truth, dir(tag, "ids", liveVersion(spark, tag)),
-        idCol)
-      spark.catalog.refreshTable(idsTable(tag))
-    }
-    drifted
-  }
+      tag: String): Boolean = store.repairKnownIds(spark, tag)
 
   /** The [[bm25TopK]] oracle as a reusable CTE chain (final CTE
     * `<pre>bm25_ranked(query_id, doc_id, score_fp, rank)` holds ALL

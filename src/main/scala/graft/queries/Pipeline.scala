@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Audio, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{Audio, Dedup, EvalOnce, Multimodal, Similarity, TextAnalysis}
 import Q._
 
 /** LLM-training-data pipeline operators as verifiable queries:
@@ -685,8 +685,11 @@ object Pipeline {
       val sh = Tables.load(s, dir, "documents")
         .filter(col("doc_id") < 1000)
         .select(col("doc_id"), Dedup.charShingles(col("text"), 5).as("sset"))
+      // EvalOnce: one array_intersect per pair, never inside the
+      // nested-loop join's condition
       sh.as("a").join(sh.as("b"), col("a.doc_id") < col("b.doc_id"))
-        .withColumn("jaccard", Dedup.jaccard(col("a.sset"), col("b.sset")))
+        .withColumn("jaccard",
+          EvalOnce(Dedup.jaccard(col("a.sset"), col("b.sset"))))
         .filter(col("jaccard") >= 0.5)
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
           col("jaccard"))

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,20 +22,18 @@ import org.apache.spark.sql.functions._
   * hygiene matters as much as pruning at warehouse scale. */
 object Partitioned {
 
-  private val materialized = new ConcurrentHashMap[String, Boolean]()
-
-  /** Idempotently (per JVM) write `events` from `dir` partitioned by
-    * calendar day under java.io.tmpdir, return the partitioned path. */
+  /** Write `events` from `dir` partitioned by calendar day under the
+    * per-process root ([[Bucketing.processRoot]], so two JVMs on one
+    * host never overwrite each other's table), once per JVM
+    * ([[Bucketing.ensureOnce]]); return the partitioned path. */
   def ensureEventsByDay(spark: SparkSession, dir: String, tag: String): String = {
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_partitioned/$tag/events_by_day"
-    materialized.computeIfAbsent(path, { _ =>
-      val e = graft.Tables.load(spark, dir, "events")
+    val path = s"${Bucketing.processRoot}/partitioned/$tag/events_by_day"
+    Bucketing.ensureOnce(s"events_by_day@$path") {
+      graft.Tables.load(spark, dir, "events")
         .withColumn("day", to_date(col("ts")))
-      e.repartition(col("day"))
+        .repartition(col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(path)
-      true
-    })
+    }
     path
   }
 

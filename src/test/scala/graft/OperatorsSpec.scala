@@ -1777,24 +1777,37 @@ class OperatorsSpec extends AnyFunSuite {
   test("Retrieval.deleteFromIndex: tombstone bound auto-compacts") {
     val sf = "/root/testdata/sf0.001"
     val docs = graft.Tables.load(spark, sf, "documents")
+    val doomed = docs.filter(col("doc_id") % 7 === 0).select("doc_id")
+    val kept = docs.filter(col("doc_id") % 7 =!= 0)
     val q = Seq(1L -> Seq("spark", "join"))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Long, Long)].collect().toSet
+    val ph = Seq(1L -> "table hash", 2L -> "customer join")
+    // bound of 10: the first delete (~1/7 of the corpus, » 10 docs)
+    // must trip the auto-compaction — tombstones fold into version 1 and
+    // the table comes back empty, so the serve-time broadcast can never
+    // exceed the bound by more than one delete batch. Every family
+    // sharing the bound (BM25, phrase) takes the same checks.
+    def assertBounded(tomb: String, served: org.apache.spark.sql.DataFrame,
+        rebuilt: org.apache.spark.sql.DataFrame): Unit = {
+      assert(spark.table(tomb).count() == 0,
+        s"$tomb: exceeding maxTombstones must trigger compaction")
+      assert(served.collect().toSet == rebuilt.collect().toSet,
+        s"$tomb: auto-compacted index must equal the rebuild without the docs")
+    }
     val tag = "opspec_bm25bound"
     Retrieval.buildIndex(spark, docs, "doc_id", "text", tag)
-    // bound of 10: the first delete (~1/7 of the corpus, » 10 docs)
-    // must trip the auto-compaction — tombstones fold into era 1 and
-    // the table comes back empty, so the serve-time broadcast can never
-    // exceed the bound by more than one delete batch
-    Retrieval.deleteFromIndex(spark,
-      docs.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id", tag,
+    Retrieval.deleteFromIndex(spark, doomed, "doc_id", tag,
       maxTombstones = 10L)
-    assert(spark.table(s"g_bm25_tomb_$tag").count() == 0,
-      "exceeding maxTombstones must trigger compaction")
-    assert(canon(Retrieval.serveIndex(spark, "doc_id", q, 5, tag)) ==
-      canon(Retrieval.bm25TopK(docs.filter(col("doc_id") % 7 =!= 0),
-        "doc_id", "text", q, 5)),
-      "auto-compacted index must equal the rebuild without the docs")
+    assertBounded(s"g_bm25_tomb_$tag",
+      Retrieval.serveIndex(spark, "doc_id", q, 5, tag),
+      Retrieval.bm25TopK(kept, "doc_id", "text", q, 5))
+    val ptag = "opspec_phrbound"
+    PhraseIndex.buildPhraseIndex(spark, docs, "doc_id", "text", ptag,
+      lengths = Seq(2, 3))
+    PhraseIndex.deleteFromPhraseIndex(spark, doomed, "doc_id", ptag,
+      maxTombstones = 10L)
+    assertBounded(s"g_phr_tomb_$ptag",
+      PhraseIndex.servePhrases(spark, "doc_id", ph, 5, ptag),
+      Retrieval.phraseSearch(kept, "doc_id", "text", ph, 5))
   }
 
   test("PhraseIndex: stored serve == per-batch phraseSearch; docs read once") {
@@ -1923,7 +1936,7 @@ class OperatorsSpec extends AnyFunSuite {
     val stale = Seq((0L, "2")).toDF("gen", "lens")
     stale.repartition(1).write.mode(SaveMode.Overwrite)
       .parquet(graft.sources.VersionedStore.tableDir(
-        s"${graft.sources.Bucketing.processRoot}/phrase_$tag", "stats",
+        s"${graft.sources.Bucketing.processRoot}/phrase_$tag", "meta",
         graft.sources.VersionedStore.latest(spark,
           s"${graft.sources.Bucketing.processRoot}/phrase_$tag").get))
     spark.catalog.refreshTable(s"g_phr_meta_$tag")
@@ -2150,7 +2163,7 @@ class OperatorsSpec extends AnyFunSuite {
     // caller (round-9 ADVICE)
     spark.sql(s"DROP TABLE IF EXISTS g_ann_post_$tag")
     AnnIndex.openIndex(spark, tag)
-    assert(serve() == before, "openIndex must recover the committed era")
+    assert(serve() == before, "openIndex must recover the committed version")
     // bound enforcement: a tiny maxTombstones forces auto-compaction
     AnnIndex.deleteFromIndex(spark, Seq(6L, 7L).toDF("vec_id"), "vec_id",
       tag, maxTombstones = 1L)
@@ -2251,7 +2264,7 @@ class OperatorsSpec extends AnyFunSuite {
     val gens = spark.table(s"g_ann_post_$tag").select("gen").distinct()
       .as[Long].collect().toSet
     assert(gens == Set(0L, 1L, 2L), s"generations must never reuse: $gens")
-    // the claim floor reads the 1-row era meta + the bounded tombstone
+    // the claim floor reads the 1-row version meta + the bounded tombstone
     // table, NEVER the postings (the round-10 verdict's one remaining
     // per-append-∝-corpus cost): claiming succeeds with the postings
     // table unregistered, and lands strictly above every prior claim
@@ -2266,12 +2279,12 @@ class OperatorsSpec extends AnyFunSuite {
     val g42 = spark.table(s"g_ann_post_$tag").filter($"cand_id" === 42L)
       .select("gen").distinct().as[Long].collect().toSet
     assert(g42 == Set(4L), s"crashed claim 3 must be skipped: $g42")
-    // appends never rewrite the era meta (immutable once staged —
+    // appends never rewrite the version meta (immutable once staged —
     // round-10 ADVICE: the per-append delete-then-write could crash
     // into an empty metaDir and make the index unopenable)
     assert(spark.table(s"g_ann_meta_$tag").select("gen")
       .as[Long].collect().head == 0L,
-      "era meta must stay at its staged value across appends")
+      "version meta must stay at its staged value across appends")
     // crash-append a NEW id: postings hold it, the known-ids list does
     // not — repairKnownIds restates (and is a no-op when clean)
     val (_, _, b2) = AnnIndex.appendPostingsOnly(spark,
@@ -2333,7 +2346,7 @@ class OperatorsSpec extends AnyFunSuite {
       seedStride = 8, spill = 2, buckets = 2)
     // kill every %8==0 id — the reclustered quantizer's seed set is
     // empty, which (unguarded) staged ZERO postings and committed an
-    // empty era while retention deleted the old one: silent loss of
+    // empty version while retention deleted the old one: silent loss of
     // the whole live corpus (round-10 ADVICE, medium)
     AnnIndex.deleteFromIndex(spark,
       Seq(0L, 8L, 16L).toDF("vec_id"), "vec_id", tag)

@@ -246,17 +246,11 @@ class PlanAuditSpec extends AnyFunSuite {
       s"unexpected nested-loop joins: ${offenders.mkString(", ")}")
   }
 
-  /** Queries allowed an expensive expression in a join condition: each
-    * is a deliberate per-pair scorer over a bounded candidate set. */
-  private val expensiveJoinAllowed = Set(
-    "dd_ngram_jaccard" // brute-force ground-truth baseline, pinned to id<1000
-  )
-
   test("PlanLint sweep: scorers stay out of join conditions (expensive-join-condition)") {
     // array_intersect, Levenshtein, UDFs and lambdas in a join condition
     // run per compared pair; EvalOnce keeps each scorer one evaluation
     val offenders = plans.collect {
-      case (n, Right(p)) if !expensiveJoinAllowed(n) =>
+      case (n, Right(p)) =>
         n -> graft.plans.PlanLint.lintPlan(p)
           .filter(_.rule == "expensive-join-condition").map(_.detail)
     }.filter(_._2.nonEmpty)

@@ -335,6 +335,12 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(Coverage.j14DppJoin)
     assert(p.toLowerCase.contains("dynamicpruning"),
       s"expected a dynamic partition pruning filter on the fact scan:\n$p")
+    // the table lives under this JVM's pid-scoped root: a second JVM on
+    // the same data dir writes its own copy instead of overwriting ours
+    val path = graft.sources.Partitioned.ensureEventsByDay(spark, sf,
+      sf.replaceAll("[^A-Za-z0-9]", "_"))
+    assert(path.startsWith(graft.sources.Bucketing.processRoot + "/"),
+      s"partitioned table must sit under the process root: $path")
   }
 
   test("dd_semantic: centroid assignment is expression-only — no window, no product") {
