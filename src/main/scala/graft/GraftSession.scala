@@ -1,5 +1,8 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's recommended scale configuration —
@@ -62,6 +65,30 @@ object GraftSession {
     CodegenCacheKey -> CodegenCacheEntries,
     "spark.sql.codegen.useIdInClassName" -> false)
 
+  /** Every session's shared confs, tests included: [[CodegenCacheConf]]
+    * plus the engine's Hadoop `file:` filesystem,
+    * [[graft.sources.NioLocalFileSystem]], as `fs.file.impl`.
+    *
+    * Why the filesystem: Hadoop's stock local filesystem, without the
+    * native libhadoop, forks `chmod` after every file create and every
+    * `mkdir`, once for the file and once for its `.crc`. An `ingest`
+    * micro-batch writes its catalog tables and lease files through it.
+    * Measured with JFR's `jdk.ProcessStart` over one perfbench `ingest`
+    * run (sf0.01, 4 cores, seed 7002, 20 s window): with the stock class,
+    * 1880 process starts over 16 micro-batches, 1440 of them `chmod`,
+    * about 117 per batch and rising as the store accreted files; with
+    * this class, 508 over 19 batches, about 27 per batch. None of those
+    * is a table or lease write: they are the streaming checkpoint's own
+    * `readlink`, `ls -ld` and `chmod` (296, 107 and 79), which go
+    * through Hadoop's `FileContext` and its own raw filesystem, not
+    * `fs.file.impl`.
+    *
+    * A JVM caches one filesystem per scheme and user, created from the
+    * configuration of whoever opened it first, so [[build]] reads the
+    * class back and refuses a stock one. */
+  val SessionConf: Map[String, Any] = CodegenCacheConf +
+    ("spark.hadoop.fs.file.impl" -> classOf[graft.sources.NioLocalFileSystem].getName)
+
   /** @param cpus parallelism for local mode (driver boxes); on a cluster
     *             this is executor-provided and the master line is removed
     * @param shufflePartitions match total cores on the test box; at
@@ -88,9 +115,11 @@ object GraftSession {
       // against the oracle drift by the host offset
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(CodegenCacheConf)
+      .config(SessionConf)
       .getOrCreate()
     requireCodegenCache(spark.conf.get(CodegenCacheKey).toInt)
+    requireLocalFs(FileSystem.get(new URI("file:///"),
+      spark.sparkContext.hadoopConfiguration).getClass)
     spark
   }
 
@@ -108,4 +137,21 @@ object GraftSession {
           "JVM's first session through GraftSession.build, or set " +
           s"$CodegenCacheKey to at least $CodegenCacheEntries on the session " +
           "that starts first.")
+
+  /** Fails when the session's `file:` filesystem, `cls` as read back
+    * from the JVM's filesystem cache, is not the class [[SessionConf]]
+    * sets. A
+    * filesystem opened before the session, from a configuration without
+    * that setting, is cached and shared by every later caller, so
+    * without this check the session would fork `chmod` unnoticed. */
+  private[graft] def requireLocalFs(cls: Class[_]): Unit =
+    if (cls != classOf[graft.sources.NioLocalFileSystem])
+      throw new IllegalStateException(
+        s"the session's file: filesystem is ${cls.getName}, not " +
+          s"${classOf[graft.sources.NioLocalFileSystem].getName}, because a " +
+          "filesystem opened earlier in this JVM is cached; every file " +
+          "create would fork chmod. Create the JVM's first session through " +
+          "GraftSession.build before opening any Hadoop FileSystem, or set " +
+          "fs.file.impl to that class on the configuration that opens the " +
+          "first one.")
 }

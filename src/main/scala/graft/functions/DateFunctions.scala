@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Date/time functions (SURVEY.md §2.8 D1–D7). Pure Column expressions;
-  * session timezone pinned UTC (build.sbt) for cross-engine parity. */
+/** Date/time functions (SURVEY.md §2.8 D1–D6; D7's duration is inline in
+  * [[graft.queries.Aggregates]]). Pure Column expressions; session
+  * timezone pinned UTC (build.sbt) for cross-engine parity. */
 object DateFunctions {
 
   /** D1 — multi-format tolerant timestamp parse: ISO, date-only, UK slash
@@ -44,9 +45,4 @@ object DateFunctions {
     * NameError is not replicated — SURVEY §7.4.5). */
   def sinceDaysAgo(days: Int): Column =
     current_timestamp() - expr(s"INTERVAL $days DAYS")
-
-  /** D7 — exact duration between timestamps in microseconds (unix_timestamp
-    * would truncate to seconds). Reference: database.py:1236-1238. */
-  def durationMicros(start: Column, end: Column): Column =
-    unix_micros(end) - unix_micros(start)
 }

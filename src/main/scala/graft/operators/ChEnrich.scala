@@ -148,12 +148,4 @@ object ChEnrich {
     subResource(spark, url, companies, "charges",
       Seq("status", "created_on"),
       numberCol, apiKey, itemsPerPage = 25, callsPerSec = callsPerSec)
-
-  /** api_clients.py:187-194. */
-  def filingHistory(spark: SparkSession, url: String, companies: DataFrame,
-      numberCol: String = "company_number", apiKey: String = "",
-      callsPerSec: Double = 2.0): DataFrame =
-    subResource(spark, url, companies, "filing-history",
-      Seq("category", "date", "description"),
-      numberCol, apiKey, itemsPerPage = 20, callsPerSec = callsPerSec)
 }

@@ -43,12 +43,20 @@ object Dedup {
       sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
       i => text.substr(i, lit(n))))
 
-  /** Jaccard similarity of two (already-distinct) shingle arrays, as an
-    * exact double (|∩| / |∪| with integer operands). */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b))
+  /** `df` plus column `out`: the Jaccard similarity of two
+    * (already-distinct) shingle arrays, as an exact double (|∩| / |∪|
+    * with integer operands, 0 for two empty sets). The intersection size
+    * is taken once per row behind [[EvalOnce]], as in [[jaccardAtLeast]];
+    * as a plain expression the CASE and the union each planned their own
+    * `array_intersect`, three per pair. */
+  def withJaccard(df: DataFrame, a: Column, b: Column,
+      out: String): DataFrame = {
+    val inter = col("__inter")
     val union = size(a) + size(b) - inter
-    when(union > 0, inter.cast("double") / union.cast("double")).otherwise(0.0)
+    df.withColumn("__inter", EvalOnce(size(array_intersect(a, b))))
+      .withColumn(out,
+        when(union > 0, inter.cast("double") / union.cast("double")).otherwise(0.0))
+      .drop("__inter")
   }
 
   /** Threshold-verified Jaccard over attached (hs_a, hs_b) candidate
@@ -73,13 +81,6 @@ object Dedup {
     * oracle SQL builder. */
   def minhashA(j: Int): Long = (j * 2654435761L + 1) % P
   def minhashB(j: Int): Long = (j * 40503L + 17) % P
-
-  /** j-th MinHash component over a pre-hashed shingle array (hash each
-    * shingle once with hash31, then permute per component — k× cheaper
-    * than hashing inside every component). */
-  def minhashComponent(hashes: Column, j: Int): Column =
-    array_min(transform(hashes,
-      h => (lit(minhashA(j)) * h + lit(minhashB(j))) % P))
 
   /** Near-duplicate pairs via MinHash + LSH banding.
     *

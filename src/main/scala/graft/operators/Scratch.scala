@@ -60,7 +60,4 @@ object Scratch {
     live.forEach(d => { d.unpersist(); () })
     live.clear()
   }
-
-  /** Registered-but-unreleased count (audit hook). */
-  def liveCount: Int = live.size()
 }

@@ -270,10 +270,23 @@ object Catalog {
   * the latest marker with one listing. [[append]] and
   * [[overwritePartitions]] write in place (see each).
   *
+  * File count: a merge writes base ∪ delta with no repartition, so left
+  * alone each commit kept the previous version's files and added the
+  * batch's, and every file under Spark's open cost is a scan task of its
+  * own. upsert and insertIfAbsent therefore coalesce the snapshot, with
+  * no shuffle and no extra job, to one file per
+  * [[TableStore.TargetFileBytes]] of the previous version's data. append
+  * coalesces its batch the same way and folds the live version with
+  * [[compact]] once it holds [[TableStore.MaxLiveFiles]] files more than
+  * that. overwrite keeps the caller's layout.
+  *
   * Scale: merges shuffle once on the business key; a commit rewrites
   * the table (partition-level overwrite is the M8 path for derived
-  * tables). All paths go through the Hadoop FS API, so `root` may be any
-  * supported filesystem, not just local disk. */
+  * tables). A merge's file count follows the table's size before it, so
+  * a batch far larger than its table (a bulk load) is written by few
+  * tasks; load one with overwrite, then merge. All paths go through the
+  * Hadoop FS API, so `root` may be any supported filesystem, not just
+  * local disk. */
 final class TableStore(spark: SparkSession, root: String) {
   import graft.operators.Merge
 
@@ -317,16 +330,22 @@ final class TableStore(spark: SparkSession, root: String) {
   /** Commit `next(previous)` as the table's next version — the previous
     * snapshot is read under the same lease hold (the empty table before
     * the first commit) — then drop every version before the previous
-    * one. Returns the committed version. */
-  private def commit(name: String)(next: DataFrame => DataFrame): Long = {
+    * one. `sized` coalesces the snapshot to the [[fileCount]] of the
+    * previous version's bytes (none before the first commit). Returns
+    * the committed version. */
+  private def commit(name: String, sized: Boolean = false)(
+      next: DataFrame => DataFrame): Long = {
     val d = defOf(name)
     val base = path(name)
     val v = VersionedStore.publish(spark, base) { v =>
       val prev = if (v == 0) spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], d.schema)
         else readAt(name, v - 1)
+      val snap = checked(d, next(prev), "writing")
       VersionedStore.writeSnapshot(spark, VersionedStore.verDir(base, v),
-        checked(d, next(prev), "writing"))
+        if (!sized) snap
+        else snap.coalesce(fileCount(
+          if (v == 0) 0L else VersionedStore.fileStats(spark, base, v - 1)._2)))
     }
     VersionedStore.retainFrom(spark, base, v - 1)
     v
@@ -341,15 +360,26 @@ final class TableStore(spark: SparkSession, root: String) {
     * version), under the table's writer lease. Like any parquet append,
     * a crash mid-write can leave part of the batch behind; the
     * ingestion paths anti-join against the stored keys, so the
-    * redelivery appends only the rest. */
+    * redelivery appends only the rest.
+    *
+    * The batch has no stored size, so it is coalesced to the
+    * [[fileCount]] of the optimizer's size estimate. That estimate is
+    * high for most plans (a join's is the product of its inputs'), so it
+    * errs towards more files. Once the live version holds more than
+    * [[TableStore.MaxLiveFiles]] files beyond the [[fileCount]] that
+    * [[compact]] would leave it, the append folds it with [[compact]]. */
   def append(name: String, df: DataFrame): Unit = {
     val got = checked(defOf(name), df, "appending")
     createIfNotExists(name)
     val base = path(name)
-    VersionedStore.withWriterLock(spark, base) {
-      got.write.mode("append").parquet(
-        VersionedStore.verDir(base, VersionedStore.latest(spark, base).get))
+    val estimate = got.queryExecution.optimizedPlan.stats.sizeInBytes
+    val (files, bytes) = VersionedStore.withWriterLock(spark, base) {
+      val v = VersionedStore.latest(spark, base).get
+      got.coalesce(fileCount(estimate.min(Long.MaxValue).toLong))
+        .write.mode("append").parquet(VersionedStore.verDir(base, v))
+      VersionedStore.fileStats(spark, base, v)
     }
+    if (files > fileCount(bytes) + TableStore.MaxLiveFiles) { compact(name); () }
   }
 
   /** MERGE on the table's registered business key (M1-M6): updates win on
@@ -357,14 +387,14 @@ final class TableStore(spark: SparkSession, root: String) {
   def upsert(name: String, updates: DataFrame): Unit = {
     val d = defOf(name)
     require(d.businessKey.nonEmpty, s"$name has no business key; use append/overwrite")
-    commit(name)(Merge.upsert(_, updates, d.businessKey))
+    commit(name, sized = true)(Merge.upsert(_, updates, d.businessKey))
   }
 
   /** M5/M10 check-then-insert on the business key. */
   def insertIfAbsent(name: String, incoming: DataFrame): Unit = {
     val d = defOf(name)
     require(d.businessKey.nonEmpty, s"$name has no business key; use append/overwrite")
-    commit(name)(Merge.insertIfAbsent(_, incoming, d.businessKey))
+    commit(name, sized = true)(Merge.insertIfAbsent(_, incoming, d.businessKey))
   }
 
   /** Partition-aware overwrite (M8 at warehouse scale): writes `df` with
@@ -414,13 +444,19 @@ final class TableStore(spark: SparkSession, root: String) {
     * periodic compaction is part of table maintenance. Returns
     * (filesBefore, filesAfter). Partitioned tables need per-partition
     * compaction — run this only on unpartitioned catalog tables. */
-  def compact(name: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
+  def compact(name: String,
+      targetFileBytes: Long = TableStore.TargetFileBytes): (Int, Int) = {
     val base = path(name)
     val (before, totalBytes) = VersionedStore.fileStats(spark, base, live(name))
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val v = commit(name)(_.repartition(nFiles))
+    val v = commit(name)(_.repartition(fileCount(totalBytes, targetFileBytes)))
     (before, VersionedStore.fileStats(spark, base, v)._1)
   }
+
+  /** Files for `bytes` of data at `target` bytes each: at least one. */
+  private def fileCount(bytes: Long,
+      target: Long = TableStore.TargetFileBytes): Int =
+    math.max(1L, math.ceil(bytes.toDouble / target).toLong)
+      .min(Int.MaxValue).toInt
 
   /** Business-key uniqueness audit — the check the reference gets from
     * its unique indexes. Returns offending keys (empty = consistent). */
@@ -430,4 +466,26 @@ final class TableStore(spark: SparkSession, root: String) {
     read(name).groupBy(d.businessKey.map(col): _*)
       .agg(count(lit(1)).as("n")).filter(col("n") > 1)
   }
+}
+
+object TableStore {
+
+  /** Target bytes of one data file: [[TableStore.compact]]'s default and
+    * the size that merges and appends coalesce towards. */
+  val TargetFileBytes: Long = 128L << 20
+
+  /** Most appended files the live version keeps beyond the
+    * `ceil(bytes / TargetFileBytes)` files that [[TableStore.compact]]
+    * would leave it; one more and [[TableStore.append]] folds it with
+    * [[TableStore.compact]]. Counting beyond the compacted layout keeps
+    * a table larger than 16 target files from folding on every append.
+    *
+    * Basis: a file below Spark's `openCostInBytes` (4 MB) is a scan task
+    * of its own, so every read of the table pays one task per file. A
+    * coalesced append adds about one file per batch. At 16, a read of a
+    * small table schedules at most 17 tasks for it, about four waves on
+    * 4 local cores, and the fold, one read and one rewrite of the table
+    * (about what one merge commit costs), comes about once per 16
+    * appends. */
+  val MaxLiveFiles: Int = 16
 }

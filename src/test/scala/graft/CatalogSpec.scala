@@ -207,6 +207,107 @@ class CatalogSpec extends AnyFunSuite {
     assert(got == (1L to 64L).map(i => f"$i%08d").toSet)
   }
 
+  test("merges and appends keep every version within the file bound") {
+    import graft.sources.VersionedStore
+    val store = freshStore()
+    val (pa, ap, m) = (Catalog.planningApplications, Catalog.applicants,
+      Catalog.applicantCompanyMatches)
+    def fileCounts(name: String): Seq[Int] = {
+      val base = store.path(name)
+      VersionedStore.versions(spark, base)
+        .map(v => VersionedStore.fileStats(spark, base, v)._1)
+    }
+    // a folded version is the one target-sized file compact leaves
+    val appendBound = 1 + TableStore.MaxLiveFiles
+    (1 to 20).foreach { i =>
+      // four partitions a batch: written as they come, every merge would
+      // keep the previous files and add four
+      store.upsert(m.name, mk(m, Seq(i, i + 1).map(k => Map[String, Any](
+        "id" -> k.toLong, "applicant_id" -> k.toLong, "company_id" -> 1L,
+        "match_method" -> s"b$i")): _*).repartition(4))
+      store.insertIfAbsent(pa.name, mk(pa, Seq(i, i + 1).map(k =>
+        Map[String, Any]("id" -> (100L * i + k), "borough" -> "camden",
+          "reference" -> s"r$k")): _*).repartition(4))
+      store.append(ap.name, mk(ap, (0 until 3).map(j => Map[String, Any](
+        "id" -> (3L * i + j), "planning_application_id" -> i.toLong,
+        "raw_name" -> s"n$i-$j")): _*).repartition(4))
+      Seq(m.name, pa.name).foreach(t =>
+        assert(fileCounts(t).forall(_ == 1), s"$t after batch $i: ${fileCounts(t)}"))
+      // the live version; the one kept before a fold held the files
+      // that triggered it
+      assert(fileCounts(ap.name).last <= appendBound,
+        s"applicants after batch $i: ${fileCounts(ap.name)}")
+    }
+    // 20 appends of up to 4 files each passed the bound: folded at least once
+    assert(VersionedStore.latest(spark, store.path(ap.name)).exists(_ > 0))
+    // updates win: key k was last written by batch k (batch 20 for 21)
+    val methods = store.read(m.name).select("applicant_id", "match_method")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(methods == (1 to 21).map(k => k.toLong -> s"b${math.min(k, 20)}").toMap)
+    // first insert wins: r1 from batch 1, rk from batch k-1
+    val ids = store.read(pa.name).select("reference", "id")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(ids == (1 to 21).map(k =>
+      s"r$k" -> (100L * math.max(k - 1, 1) + k)).toMap)
+    assert(store.read(ap.name).select("id").collect().map(_.getLong(0)).sorted
+      .toSeq == (1 to 20).flatMap(i => (0 until 3).map(j => 3L * i + j)).sorted)
+    Seq(m.name, pa.name).foreach(t => assert(store.keyViolations(t).isEmpty, t))
+  }
+
+  test("the engine filesystem sets the stock permissions, umask applied") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+    import graft.sources.NioRawLocalFileSystem
+    val root = Files.createTempDirectory("graft_perm")
+    Seq("022", "027", "077", "002").foreach { umask =>
+      val conf = new Configuration()
+      conf.set("fs.permissions.umask-mode", umask)
+      def made(fs: FileSystem, tag: String) = {
+        fs.initialize(java.net.URI.create("file:///"), conf)
+        fs.create(new Path(s"$root/$umask-$tag/parent/file")).close()
+        fs.mkdirs(new Path(s"$root/$umask-$tag/dir"))
+        Seq("parent", "parent/file", "dir").map(p =>
+          Files.getPosixFilePermissions(Paths.get(s"$root/$umask-$tag/$p")))
+      }
+      val stock = made(new RawLocalFileSystem, "stock")
+      assert(made(new NioRawLocalFileSystem, "nio") == stock, s"umask $umask")
+      assert(stock.head != stock(1), "a directory and a file differ in x bits")
+    }
+  }
+
+  test("a sticky-bit permission takes the stock chmod path") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    import graft.sources.NioRawLocalFileSystem
+    val raw = new NioRawLocalFileSystem
+    raw.initialize(java.net.URI.create("file:///"), new Configuration())
+    val dir = Files.createTempDirectory("graft_sticky").resolve("d")
+    raw.mkdirs(new Path(dir.toUri))
+    def mode() = Files.getAttribute(dir, "unix:mode").asInstanceOf[Int] & 0xfff
+    // java.nio cannot express the sticky bit: only chmod sets it
+    raw.setPermission(new Path(dir.toUri), new FsPermission("1777"))
+    assert(mode() == Integer.parseInt("1777", 8), mode().toOctalString)
+    raw.setPermission(new Path(dir.toUri), new FsPermission("750"))
+    assert(mode() == Integer.parseInt("750", 8), mode().toOctalString)
+  }
+
+  test("the session's file: filesystem is the engine's class") {
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+    import graft.sources.NioLocalFileSystem
+    val fs = new Path(java.nio.file.Files.createTempDirectory("graft_fs").toUri)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.getClass == classOf[NioLocalFileSystem])
+    assert(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration) eq fs)
+    GraftSession.requireLocalFs(fs.getClass)
+    val e = intercept[IllegalStateException](
+      GraftSession.requireLocalFs(classOf[LocalFileSystem]))
+    assert(e.getMessage.contains("GraftSession.build") &&
+      e.getMessage.contains("fs.file.impl"))
+  }
+
   test("a held writer lock makes mutators fail fast, and locks don't leak") {
     val store = freshStore()
     val td = Catalog.companies

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for all suites. The codegen cache takes
-  * the production policy, [[GraftSession.CodegenCacheConf]], so the
-  * suites compile generated code as often as the engine does. */
+/** One shared local SparkSession for all suites. It takes the production
+  * session confs, [[GraftSession.SessionConf]]: the codegen cache policy,
+  * so the suites compile generated code as often as the engine does, and
+  * the engine's `file:` filesystem, so they write files the way it does. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -16,7 +17,7 @@ object TestSpark {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(GraftSession.CodegenCacheConf)
+      .config(GraftSession.SessionConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
