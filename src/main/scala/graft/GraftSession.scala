@@ -65,6 +65,17 @@ object GraftSession {
     CodegenCacheKey -> CodegenCacheEntries,
     "spark.sql.codegen.useIdInClassName" -> false)
 
+  /** Input split size of every session built here, set as
+    * `spark.sql.files.maxPartitionBytes` (4 MB): one ~20 MB parquet file
+    * would otherwise be a single input split; small splits keep all local
+    * threads on the scan. On a cluster leave the 128 MB default (files are
+    * many and large).
+    *
+    * [[graft.sources.TableStore]] writes its files towards this size, so
+    * a table of `n` splits is `n` files and a scan of it keeps `n` tasks;
+    * a larger file of one row group would be read by one task. */
+  val SplitBytes: Long = 4L << 20
+
   /** Every session's shared confs, tests included: [[CodegenCacheConf]]
     * plus the engine's Hadoop `file:` filesystem,
     * [[graft.sources.NioLocalFileSystem]], as `fs.file.impl`.
@@ -107,10 +118,7 @@ object GraftSession {
       // AQE: runtime coalescing, skew-join splitting, runtime re-plan
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // one ~20 MB parquet file would otherwise be a single input split —
-      // small splits keep all local threads on the scan; on a cluster
-      // leave the 128m default (files are many and large)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.sql.files.maxPartitionBytes", SplitBytes)
       // engines must agree on the session zone or timestamp comparisons
       // against the oracle drift by the host offset
       .config("spark.sql.session.timeZone", "UTC")

@@ -275,18 +275,21 @@ object Catalog {
   * batch's, and every file under Spark's open cost is a scan task of its
   * own. upsert and insertIfAbsent therefore coalesce the snapshot, with
   * no shuffle and no extra job, to one file per
-  * [[TableStore.TargetFileBytes]] of the previous version's data. append
-  * coalesces its batch the same way and folds the live version with
-  * [[compact]] once it holds [[TableStore.MaxLiveFiles]] files more than
-  * that. overwrite keeps the caller's layout.
+  * [[TableStore.TargetFileBytes]] (the engine session's input split) of
+  * the previous version's data, which keeps one scan task per split.
+  * append coalesces its batch to that count of the live version and,
+  * before writing, folds the live version to it once it holds
+  * [[TableStore.MaxLiveFiles]] files more. overwrite keeps the caller's
+  * layout.
   *
   * Scale: merges shuffle once on the business key; a commit rewrites
   * the table (partition-level overwrite is the M8 path for derived
-  * tables). A merge's file count follows the table's size before it, so
-  * a batch far larger than its table (a bulk load) is written by few
-  * tasks; load one with overwrite, then merge. All paths go through the
-  * Hadoop FS API, so `root` may be any supported filesystem, not just
-  * local disk. */
+  * tables). The file count of a merge or an append follows the table's
+  * size before it, and coalesce narrows the stages before it too, so a
+  * batch far larger than its table (a bulk load) is computed and written
+  * by few tasks; load one with overwrite, then merge. All paths go
+  * through the Hadoop FS API, so `root` may be any supported filesystem,
+  * not just local disk. */
 final class TableStore(spark: SparkSession, root: String) {
   import graft.operators.Merge
 
@@ -335,9 +338,20 @@ final class TableStore(spark: SparkSession, root: String) {
     * the committed version. */
   private def commit(name: String, sized: Boolean = false)(
       next: DataFrame => DataFrame): Long = {
+    val base = path(name)
+    val v = VersionedStore.withWriterLock(spark, base)(
+      commitLocked(name, sized)(next))
+    VersionedStore.retainFrom(spark, base, v - 1)
+    v
+  }
+
+  /** [[commit]]'s publish alone, for a caller that holds the table's
+    * writer lease. */
+  private def commitLocked(name: String, sized: Boolean = false)(
+      next: DataFrame => DataFrame): Long = {
     val d = defOf(name)
     val base = path(name)
-    val v = VersionedStore.publish(spark, base) { v =>
+    VersionedStore.publishLocked(spark, base) { v =>
       val prev = if (v == 0) spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], d.schema)
         else readAt(name, v - 1)
@@ -347,8 +361,6 @@ final class TableStore(spark: SparkSession, root: String) {
         else snap.coalesce(fileCount(
           if (v == 0) 0L else VersionedStore.fileStats(spark, base, v - 1)._2)))
     }
-    VersionedStore.retainFrom(spark, base, v - 1)
-    v
   }
 
   /** Schema-checked overwrite, committed as the next version. */
@@ -356,30 +368,36 @@ final class TableStore(spark: SparkSession, root: String) {
     commit(name)(_ => df); ()
   }
 
-  /** Append in place into the live version (no rewrite, no new
-    * version), under the table's writer lease. Like any parquet append,
-    * a crash mid-write can leave part of the batch behind; the
-    * ingestion paths anti-join against the stored keys, so the
-    * redelivery appends only the rest.
+  /** Append in place into the live version (no rewrite, no new version
+    * but for the fold below), under the table's writer lease. Like any
+    * parquet append, a crash mid-write can leave part of the batch
+    * behind; the ingestion paths anti-join against the stored keys, so
+    * the redelivery appends only the rest.
     *
-    * The batch has no stored size, so it is coalesced to the
-    * [[fileCount]] of the optimizer's size estimate. That estimate is
-    * high for most plans (a join's is the product of its inputs'), so it
-    * errs towards more files. Once the live version holds more than
-    * [[TableStore.MaxLiveFiles]] files beyond the [[fileCount]] that
-    * [[compact]] would leave it, the append folds it with [[compact]]. */
+    * The batch is coalesced to the [[fileCount]] of the live version's
+    * bytes: the optimizer's estimate of a batch is no size to go by (a
+    * join's grows with the product of its inputs': 22 to 135 MB for
+    * `ingest`'s `applicants` batches of about 8 KB, rising with the
+    * table). When the live version holds more than
+    * [[TableStore.MaxLiveFiles]] files beyond that count, the same lease
+    * hold first folds it into a new version of that many files, and the
+    * batch lands there, so a failed fold fails the append before any of
+    * its rows land. */
   def append(name: String, df: DataFrame): Unit = {
     val got = checked(defOf(name), df, "appending")
     createIfNotExists(name)
     val base = path(name)
-    val estimate = got.queryExecution.optimizedPlan.stats.sizeInBytes
-    val (files, bytes) = VersionedStore.withWriterLock(spark, base) {
-      val v = VersionedStore.latest(spark, base).get
-      got.coalesce(fileCount(estimate.min(Long.MaxValue).toLong))
-        .write.mode("append").parquet(VersionedStore.verDir(base, v))
-      VersionedStore.fileStats(spark, base, v)
+    val (live, v) = VersionedStore.withWriterLock(spark, base) {
+      val live = VersionedStore.latest(spark, base).get
+      val (files, bytes) = VersionedStore.fileStats(spark, base, live)
+      val target = fileCount(bytes)
+      val v = if (files <= target + TableStore.MaxLiveFiles) live
+        else commitLocked(name)(_.repartition(target))
+      got.coalesce(target).write.mode("append")
+        .parquet(VersionedStore.verDir(base, v))
+      (live, v)
     }
-    if (files > fileCount(bytes) + TableStore.MaxLiveFiles) { compact(name); () }
+    if (v != live) VersionedStore.retainFrom(spark, base, live)
   }
 
   /** MERGE on the table's registered business key (M1-M6): updates win on
@@ -470,22 +488,27 @@ final class TableStore(spark: SparkSession, root: String) {
 
 object TableStore {
 
-  /** Target bytes of one data file: [[TableStore.compact]]'s default and
-    * the size that merges and appends coalesce towards. */
-  val TargetFileBytes: Long = 128L << 20
+  /** Target bytes of one data file written by a merge, an append, a fold
+    * or [[TableStore.compact]] by default: the engine session's input
+    * split, [[graft.GraftSession.SplitBytes]]. A file of one split is one
+    * scan task, and coalescing to one file per split keeps the merge's
+    * own stages as parallel as a scan of its input. */
+  val TargetFileBytes: Long = graft.GraftSession.SplitBytes
 
   /** Most appended files the live version keeps beyond the
-    * `ceil(bytes / TargetFileBytes)` files that [[TableStore.compact]]
-    * would leave it; one more and [[TableStore.append]] folds it with
-    * [[TableStore.compact]]. Counting beyond the compacted layout keeps
-    * a table larger than 16 target files from folding on every append.
+    * `ceil(bytes / TargetFileBytes)` it would hold folded; past that,
+    * [[TableStore.append]] folds it before writing. Counting beyond the
+    * folded layout keeps a table of more than 16 splits from folding on
+    * every append.
     *
     * Basis: a file below Spark's `openCostInBytes` (4 MB) is a scan task
-    * of its own, so every read of the table pays one task per file. A
-    * coalesced append adds about one file per batch. At 16, a read of a
-    * small table schedules at most 17 tasks for it, about four waves on
-    * 4 local cores, and the fold, one read and one rewrite of the table
-    * (about what one merge commit costs), comes about once per 16
-    * appends. */
+    * of its own, so every read of the table pays one task per file.
+    * Measured on perfbench `ingest` (sf0.01, 4 cores, seed 7002): the
+    * `applicants` batch arrives in 4 partitions; coalesced to the live
+    * version's count it wrote 1 file per append, uncoalesced 4. So a
+    * read of a small table schedules at most 18 tasks for it, about
+    * four waves on 4 local cores, and the fold, one read and one
+    * rewrite of the table (about what one merge commit costs), comes
+    * once per 17 appends. */
   val MaxLiveFiles: Int = 16
 }

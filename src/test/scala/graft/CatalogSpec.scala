@@ -217,11 +217,12 @@ class CatalogSpec extends AnyFunSuite {
       VersionedStore.versions(spark, base)
         .map(v => VersionedStore.fileStats(spark, base, v)._1)
     }
-    // a folded version is the one target-sized file compact leaves
-    val appendBound = 1 + TableStore.MaxLiveFiles
+    // the live version: the one file a fold leaves, the files the bound
+    // allows beyond it, and the batch that landed after the check
+    val appendBound = 1 + TableStore.MaxLiveFiles + 1
     (1 to 20).foreach { i =>
       // four partitions a batch: written as they come, every merge would
-      // keep the previous files and add four
+      // keep the previous files and add four, every append add four
       store.upsert(m.name, mk(m, Seq(i, i + 1).map(k => Map[String, Any](
         "id" -> k.toLong, "applicant_id" -> k.toLong, "company_id" -> 1L,
         "match_method" -> s"b$i")): _*).repartition(4))
@@ -238,7 +239,7 @@ class CatalogSpec extends AnyFunSuite {
       assert(fileCounts(ap.name).last <= appendBound,
         s"applicants after batch $i: ${fileCounts(ap.name)}")
     }
-    // 20 appends of up to 4 files each passed the bound: folded at least once
+    // 20 appends of one file each passed the bound: folded at least once
     assert(VersionedStore.latest(spark, store.path(ap.name)).exists(_ > 0))
     // updates win: key k was last written by batch k (batch 20 for 21)
     val methods = store.read(m.name).select("applicant_id", "match_method")
@@ -300,6 +301,10 @@ class CatalogSpec extends AnyFunSuite {
     val fs = new Path(java.nio.file.Files.createTempDirectory("graft_fs").toUri)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(fs.getClass == classOf[NioLocalFileSystem])
+    // what GraftSession.build sets; the test classpath's core-site.xml
+    // sets the same class for any Hadoop configuration
+    assert(GraftSession.SessionConf("spark.hadoop.fs.file.impl") ==
+      classOf[NioLocalFileSystem].getName)
     assert(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration) eq fs)
     GraftSession.requireLocalFs(fs.getClass)
     val e = intercept[IllegalStateException](
